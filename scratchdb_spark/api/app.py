@@ -5,6 +5,16 @@ whose handler dispatches on the reference's route table. Query results
 stream chunk-by-chunk (``query.stream_json`` / ``stream_csv`` ->
 chunked responses), mirroring the reference's no-full-materialization
 design.
+
+Each query, share links included, runs in a request-scoped child of
+the service session (``session.child_session``): it shares the
+SparkContext and cache but has its own temp-view namespace, so the
+views registered for one tenant's request are invisible to every
+other request, and ``spark.sql.runSQLOnFiles`` is off in it, so a
+query cannot read ``parquet.`<path>``` around the views. Only the
+tenant tables whose names occur in the query text are registered
+(compared with ``casefold``): a query names a table by spelling it, so
+the check can register too many views but not too few.
 """
 
 from __future__ import annotations
@@ -23,6 +33,7 @@ from pyspark.sql import SparkSession
 
 from .. import query as q
 from ..ingest.pipeline import IngestPipeline, PartialInsertError
+from ..session import child_session
 from ..tables import Warehouse
 from .control import ControlStore, ShareLink
 
@@ -68,6 +79,10 @@ class ScratchAPI:
     metrics: dict[str, float] = field(default_factory=dict)
     #: (metric, route) -> cumulative bucket counts, parallel to *_BUCKETS
     hists: dict = field(default_factory=dict)
+    #: handler threads update ``metrics``/``hists`` read-modify-write
+    _metrics_lock: threading.Lock = field(
+        default_factory=threading.Lock, repr=False, compare=False
+    )
 
     #: exponential bucket edges (reference router.go:18-28 publishes
     #: latency/size histograms with exponential buckets)
@@ -75,39 +90,40 @@ class ScratchAPI:
     SIZE_BUCKETS = (256.0, 4096.0, 65536.0, 1048576.0, 16777216.0)
 
     def observe(self, route: str, seconds: float, resp_bytes: int) -> None:
-        m = self.metrics
-        m[f"requests_total{{route={route}}}"] = (
-            m.get(f"requests_total{{route={route}}}", 0) + 1
-        )
-        m[f"request_seconds_sum{{route={route}}}"] = round(
-            m.get(f"request_seconds_sum{{route={route}}}", 0.0) + seconds, 6
-        )
-        m[f"response_bytes_sum{{route={route}}}"] = (
-            m.get(f"response_bytes_sum{{route={route}}}", 0) + resp_bytes
-        )
-        for name, edges, v in (
-            ("request_seconds", self.LATENCY_BUCKETS, seconds),
-            ("response_bytes", self.SIZE_BUCKETS, float(resp_bytes)),
-        ):
-            counts = self.hists.setdefault(
-                (name, route), [0] * (len(edges) + 1)
+        with self._metrics_lock:
+            m = self.metrics
+            k = f"{{route={route}}}"
+            m["requests_total" + k] = m.get("requests_total" + k, 0) + 1
+            m["request_seconds_sum" + k] = round(
+                m.get("request_seconds_sum" + k, 0.0) + seconds, 6
             )
-            for i, le in enumerate(edges):
-                if v <= le:
-                    counts[i] += 1
-            counts[-1] += 1  # +Inf
+            m["response_bytes_sum" + k] = (
+                m.get("response_bytes_sum" + k, 0) + resp_bytes
+            )
+            for name, edges, v in (
+                ("request_seconds", self.LATENCY_BUCKETS, seconds),
+                ("response_bytes", self.SIZE_BUCKETS, float(resp_bytes)),
+            ):
+                counts = self.hists.setdefault(
+                    (name, route), [0] * (len(edges) + 1)
+                )
+                for i, le in enumerate(edges):
+                    if v <= le:
+                        counts[i] += 1
+                counts[-1] += 1  # +Inf
 
     def render_metrics(self) -> str:
         """Prometheus text format: counters/sums plus histogram buckets
         in ascending le order with the +Inf terminal bucket."""
-        lines = [
-            f"scratchdb_{k} {v}" for k, v in sorted(self.metrics.items())
-        ]
+        with self._metrics_lock:
+            metrics = sorted(self.metrics.items())
+            hists = sorted((k, list(v)) for k, v in self.hists.items())
+        lines = [f"scratchdb_{k} {v}" for k, v in metrics]
         edges_of = {
             "request_seconds": self.LATENCY_BUCKETS,
             "response_bytes": self.SIZE_BUCKETS,
         }
-        for (name, route), counts in sorted(self.hists.items()):
+        for (name, route), counts in hists:
             for le, c in zip(edges_of[name], counts):
                 lines.append(
                     f'scratchdb_{name}_bucket{{route={route},le="{le}"}} {c}'
@@ -180,13 +196,24 @@ class ScratchAPI:
         pipe.flush()  # synchronous mode for the local API
         return n
 
-    def _register_views(self, dest: str) -> None:
+    def _register_views(
+        self, session: SparkSession, dest: str, sql: str
+    ) -> None:
+        """Register, in ``session``, a view for each of ``dest``'s
+        tables whose name occurs in ``sql``. A backtick in a name is
+        doubled when quoted, so that spelling counts too."""
+        text = sql.casefold()
         for t in self.warehouse.tables(dest):
-            self.warehouse.read(dest, t).createOrReplaceTempView(t)
+            name = t.casefold()
+            if name in text or name.replace("`", "``") in text:
+                df = self.warehouse.read(dest, t, spark=session)
+                df.createOrReplaceTempView(t)
 
     def run_query(self, dest: str, sql: str, fmt: str):
-        self._register_views(dest)
-        df = q.execute(self.spark, sql)
+        session = child_session(self.spark)
+        session.conf.set("spark.sql.runSQLOnFiles", "false")
+        self._register_views(session, dest, sql)
+        df = q.execute(session, sql)
         if fmt == "csv":
             return "text/csv", q.stream_csv(df)
         return "application/json", q.stream_json(df)

@@ -5,10 +5,12 @@ The reference trims the query (pkg/util/sql.go:9-13), wraps it as
 the backend, and streams results as a JSON array or CSV-with-header
 (destinations/clickhouse/query.go:9-70, duckdb/query.go:14-113).
 
-Here the backend is Catalyst: ``spark.sql(trimmed)``. Serialization
-streams via ``toLocalIterator`` — partition-at-a-time fetch, never a
-full ``collect()`` — mirroring the reference's explicit no-full-
-materialization design (its fifo pipe / linked-list readers).
+Here the backend is Catalyst: ``spark.sql`` of the wrapped query. The
+caller picks the session, so what the query can name is what that
+session holds. Serialization streams via ``toLocalIterator`` —
+partition-at-a-time fetch, never a full ``collect()`` — mirroring the
+reference's explicit no-full-materialization design (its fifo pipe /
+linked-list readers).
 """
 
 from __future__ import annotations
@@ -16,6 +18,7 @@ from __future__ import annotations
 import json
 from typing import Iterator
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 
 
@@ -29,26 +32,29 @@ class QueryError(ValueError):
 
 
 def guard_query(query: str) -> str:
-    """Single-SELECT-statement guard.
+    """Single-query guard: the reference's subquery wrap
+    (clickhouse/query.go:11).
 
-    The reference gets this implicitly from its ``SELECT * FROM (q)``
-    subquery wrap (clickhouse/query.go:11): anything that is not a
-    bare SELECT fails to parse in the backend. We enforce it up front.
+    Whatever is not one query fails to parse inside the parentheses:
+    DDL, DML, ``INSERT OVERWRITE DIRECTORY`` behind a ``WITH``, a
+    second statement. The ``)`` goes on its own line so a trailing
+    ``-- comment`` cannot swallow it. A bare ``SELECT *`` keeps the
+    inner query's column names and ``ORDER BY`` output order.
     """
     q = trim_query(query)
     if not q:
         raise QueryError("empty query")
-    if ";" in q:
-        raise QueryError("multi-statement queries are not allowed")
-    head = q.split(None, 1)[0].lower()
-    if head not in ("select", "with", "values", "table"):
-        raise QueryError(f"only SELECT queries are allowed, got '{head}'")
-    return q
+    return f"SELECT * FROM (\n{q}\n)"
 
 
 def execute(spark: SparkSession, query: str) -> DataFrame:
-    """Trim, guard, and run the query through Catalyst."""
-    return spark.sql(guard_query(query))
+    """Trim, guard, and analyze the query through Catalyst. A query
+    that does not parse or analyze (unknown table or column, not a
+    query) raises :class:`QueryError`."""
+    try:
+        return spark.sql(guard_query(query))
+    except AnalysisException as e:
+        raise QueryError(str(e)) from e
 
 
 def _json_value(v):

@@ -231,11 +231,16 @@ class Warehouse:
         self._write_schema(database, table, schema)
         return schema
 
-    def read(self, database: str, table: str) -> DataFrame:
+    def read(
+        self, database: str, table: str, spark: SparkSession | None = None
+    ) -> DataFrame:
+        """The table as a DataFrame of ``spark`` (default: the
+        warehouse's session); the API reads through a request's own
+        session so the view it registers stays in that session."""
         # explicit sidecar schema: no footer reads at plan time, and
         # files written before a column existed project it as NULL
         # (same contract mergeSchema gave, without the per-file scan)
-        return self.spark.read.schema(
+        return (spark or self.spark).read.schema(
             self.schema(database, table)
         ).parquet(self._path(database, table))
 

@@ -4,7 +4,9 @@ from __future__ import annotations
 
 import json
 import urllib.error
+import urllib.parse
 import urllib.request
+from concurrent.futures import ThreadPoolExecutor
 
 import pytest
 
@@ -303,3 +305,243 @@ def test_shares_and_keys_survive_restart(spark, tmp_path):
     _time.sleep(1.2)
     api4 = ScratchAPI(spark=spark, warehouse=wh)
     assert api4.get_share(short_id) is None
+
+
+# -- query guard -----------------------------------------------------------
+
+
+def test_guard_refuses_write_behind_with(server, spark, tmp_path):
+    """The subquery wrap (clickhouse/query.go:11) makes anything but one
+    query fail to parse: a WITH-prefixed INSERT OVERWRITE DIRECTORY,
+    which a first-keyword check let through, writes nothing."""
+    from scratchdb_spark import query as q
+
+    hole = tmp_path / "hole"
+    for sql in (
+        "WITH x AS (SELECT 1 AS a) INSERT OVERWRITE DIRECTORY "
+        f"'{hole}' USING parquet SELECT * FROM x",
+        # closing the wrap's parenthesis early does not escape it
+        f"SELECT 1) t INSERT OVERWRITE DIRECTORY '{hole}' USING parquet "
+        "SELECT * FROM (SELECT 1",
+        "SELECT 1; SELECT 2",
+    ):
+        with pytest.raises(q.QueryError):
+            q.execute(spark, sql)
+        code, _ = _get(
+            f"{server}/api/data/query?api_key=key1&query="
+            + urllib.parse.quote(sql)
+        )
+        assert code == 400
+    assert not hole.exists()
+
+
+def test_guard_keeps_names_order_and_literals(spark):
+    """Wrapped, a query keeps its column names and ORDER BY output
+    order (SELECT, WITH, VALUES, TABLE); a ';' inside a literal and a
+    trailing line comment are fine."""
+    from scratchdb_spark import query as q
+
+    s = spark.newSession()
+    s.range(50).createOrReplaceTempView("tv")
+
+    def rows(sql):
+        return json.loads(q.query_json(s, sql))
+
+    assert rows("SELECT 'a;b' AS s") == [{"s": "a;b"}]
+    assert rows("SELECT 1 AS a -- trailing comment") == [{"a": 1}]
+    got = rows("SELECT id, id * 2 AS d FROM tv ORDER BY id DESC")
+    assert got == [{"id": i, "d": 2 * i} for i in range(49, -1, -1)]
+    got = rows("WITH x AS (SELECT id FROM tv) SELECT id AS k FROM x "
+               "ORDER BY k DESC LIMIT 5")
+    assert got == [{"k": k} for k in (49, 48, 47, 46, 45)]
+    assert rows("VALUES (2, 'b'), (1, 'a')") == [
+        {"col1": 2, "col2": "b"}, {"col1": 1, "col2": "a"},
+    ]
+    assert rows("TABLE tv") == [{"id": i} for i in range(50)]
+    with pytest.raises(q.QueryError):
+        q.execute(s, "   ;  ")
+
+
+# -- tenant isolation and named-table views ----------------------------------
+
+B_SMALL = [f"b{i:02d}" for i in range(1, 11)]
+
+
+@pytest.fixture(scope="module")
+def tenants(spark, tmp_path_factory):
+    """Two destinations whose tables share a name: destA holds
+    ``secret`` and ``shared`` (3 rows); destB holds ``shared`` (5 rows),
+    ``events`` and ten 2-row tables, 12 tables in all."""
+    root = str(tmp_path_factory.mktemp("iso_wh"))
+    api = ScratchAPI(spark=spark, warehouse=Warehouse(spark, root))
+    api.add_api_key("keyA", "destA")
+    api.add_api_key("keyB", "destB")
+    api.insert("destA", "secret", b'{"ssn": "111-22-3333"}', "horizontal")
+    api.insert("destA", "shared", json.dumps([{"v": i} for i in range(3)])
+               .encode(), "horizontal")
+    api.insert("destB", "shared", json.dumps([{"v": i} for i in range(5)])
+               .encode(), "horizontal")
+    api.insert("destB", "events", b'[{"kind": "a"}, {"kind": "b"}]',
+               "horizontal")
+    for t in B_SMALL:
+        api.insert("destB", t, b'[{"id": 1}, {"id": 2}]', "horizontal")
+    srv, port = serve_background(api)
+    yield f"http://127.0.0.1:{port}", root, api
+    srv.shutdown()
+
+
+def _query(base: str, key: str, sql: str):
+    code, body = _get(
+        f"{base}/api/data/query?api_key={key}&query="
+        + urllib.parse.quote(sql)
+    )
+    return code, (json.loads(body) if code == 200 else body)
+
+
+def _rows(api: ScratchAPI, dest: str, sql: str):
+    _ctype, chunks = api.run_query(dest, sql, "json")
+    return json.loads("".join(chunks))
+
+
+def test_leftover_view_invisible_to_other_tenant(tenants):
+    """A's views live in A's request session only: after A queries
+    ``secret``, B asking for ``secret`` is refused, not answered."""
+    base, _root, _api = tenants
+    assert _query(base, "keyA", "SELECT ssn FROM secret") == (
+        200, [{"ssn": "111-22-3333"}]
+    )
+    code, _ = _query(base, "keyB", "SELECT ssn FROM secret")
+    assert code == 400
+
+
+def test_path_qualified_read_refused(tenants):
+    """runSQLOnFiles is off in the request session: B cannot read A's
+    files by path."""
+    base, root, _api = tenants
+    code, _ = _query(
+        base, "keyB", f"SELECT * FROM parquet.`{root}/destA/secret`"
+    )
+    assert code == 400
+
+
+def test_concurrent_tenants_same_table_name(tenants):
+    """Two tenants, one table name, two threads of 50 queries each:
+    every count is the asking tenant's own."""
+    base, _root, _api = tenants
+    want = {"keyA": 3, "keyB": 5}
+
+    def count(key):
+        return _query(base, key, "SELECT count(*) AS n FROM shared")
+
+    keys = ["keyA", "keyB"] * 50
+    with ThreadPoolExecutor(2) as pool:
+        got = list(pool.map(count, keys))
+    assert [(code, rows[0]["n"]) for code, rows in got] == [
+        (200, want[k]) for k in keys
+    ]
+
+
+def test_only_named_tables_registered(tenants, monkeypatch):
+    """A query naming 1 of B's 12 tables reads 1 table."""
+    _base, _root, api = tenants
+    read, seen = api.warehouse.read, []
+
+    def spy(dest, table, spark=None):
+        seen.append((dest, table))
+        return read(dest, table, spark=spark)
+
+    monkeypatch.setattr(api.warehouse, "read", spy)
+    assert len(api.warehouse.tables("destB")) == 12
+    assert _rows(api, "destB", "SELECT count(*) AS n FROM b07") == [{"n": 2}]
+    assert seen == [("destB", "b07")]
+    seen.clear()
+    assert _rows(api, "destB", "SELECT 1 AS one") == [{"one": 1}]
+    assert seen == []
+
+
+def test_named_tables_case_backticks_and_cte(tenants):
+    """Upper-case and backtick-quoted references resolve; a CTE named
+    like a tenant table still shadows it."""
+    _base, _root, api = tenants
+    for sql in ("SELECT count(*) AS n FROM SHARED",
+                "SELECT count(*) AS n FROM `Shared`",
+                "select count(*) as n from (TABLE `SHARED`)"):
+        assert _rows(api, "destB", sql) == [{"n": 5}]
+    assert _rows(
+        api, "destB", "WITH shared AS (SELECT 42 AS n) SELECT n FROM shared"
+    ) == [{"n": 42}]
+
+
+def test_share_link_reads_named_table(tenants):
+    base, _root, _api = tenants
+    code, body = _post(
+        f"{base}/api/data/query/share?api_key=keyB",
+        json.dumps({"query": "SELECT count(*) AS n FROM b03",
+                    "duration": 3600}).encode(),
+    )
+    assert code == 200
+    code, body = _get(f"{base}/share/{json.loads(body)['id']}/data.json")
+    assert (code, json.loads(body)) == (200, [{"n": 2}])
+
+
+def test_request_session_keeps_runtime_sql_conf(spark, tmp_path):
+    """A time zone set on the service session at runtime carries into
+    the request session: timestamps render the same."""
+    from scratchdb_spark import query as q
+
+    service = spark.newSession()
+    service.conf.set("spark.sql.session.timeZone", "America/New_York")
+    api = ScratchAPI(spark=service, warehouse=Warehouse(service, str(tmp_path)))
+    sql = ("SELECT timestamp_seconds(0) AS t, "
+           "CAST(timestamp_seconds(0) AS STRING) AS s")
+    got = _rows(api, "d", sql)
+    assert got == json.loads(q.query_json(service, sql))
+    assert got[0]["s"] == "1969-12-31 19:00:00"
+
+
+def test_request_sessions_add_no_listeners(tenants):
+    """200 request sessions leave the SparkContext's listener count
+    where it was."""
+    _base, _root, api = tenants
+    bus = api.spark.sparkContext._jsc.sc().listenerBus()
+    _rows(api, "destB", "SELECT 1 AS one")
+    before = bus.listeners().size()
+    for _ in range(200):
+        assert _rows(api, "destB", "SELECT 1 AS one") == [{"one": 1}]
+    assert bus.listeners().size() == before
+
+
+def test_metrics_count_concurrent_requests(spark, tmp_path):
+    """observe() runs under a lock: N concurrent requests count N, and
+    so do N observe() calls from more threads than cores with a short
+    switch interval."""
+    import sys
+
+    api = ScratchAPI(spark=spark, warehouse=Warehouse(spark, str(tmp_path)))
+    srv, port = serve_background(api)
+    n, threads = 200, 16
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(threads) as pool:
+            codes = list(pool.map(
+                lambda _: _get(f"http://127.0.0.1:{port}/healthcheck")[0],
+                range(n),
+            ))
+            per_thread = 2000
+            list(pool.map(
+                lambda _: [api.observe("/x", 0.01, 10)
+                           for _ in range(per_thread)],
+                range(threads),
+            ))
+    finally:
+        sys.setswitchinterval(interval)
+        srv.shutdown()
+    assert codes == [200] * n
+    body = api.render_metrics()
+    for route, want in (("/healthcheck", n), ("/x", threads * per_thread)):
+        assert f"scratchdb_requests_total{{route={route}}} {want}\n" in body
+        assert (
+            f"scratchdb_request_seconds_count{{route={route}}} {want}\n"
+            in body
+        )
