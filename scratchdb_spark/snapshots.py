@@ -203,8 +203,8 @@ def _cas_backoff(attempt: int) -> None:
     writer survive a commit burst: an op whose recompute takes
     seconds conflicts with every commit that lands inside that
     window, and only a pause comparable to the burst gives its next
-    window a chance to close cleanly (measured in
-    mor_concurrent_churn_r13 — under a deliberately hot 4-writer +
+    window a chance to close cleanly (measured in the r13 concurrent
+    MoR churn rehearsal, PERF.md — under a deliberately hot 4-writer +
     compactor race, the linear 100 ms cap starved one merge past the
     whole budget). The jitter source is control-flow-only (never
     touches data or plans), so determinism contracts are unaffected.
@@ -233,12 +233,12 @@ def _put_manifest(
     racing to the same version number cannot silently last-write-win —
     the loser gets CommitConflictError. commit_snapshot retries with a
     fresh version (its manifest is recomputed from the directory, so
-    the retry adopts the winner's files too); copy-on-write DML
-    (delete_where / delete_keys / merge_upsert / overwrite_versioned)
-    retries via _retry_dml with a FULL recompute against the fresh
-    snapshot — its manifest is derived from a specific parent
-    version, so only a from-scratch attempt is serializable after
-    the winner. ``overwrite``
+    the retry adopts the winner's files too); DML (every _dml form,
+    overwrite_versioned, compaction, apply_deletion_vectors) commits
+    only through _cow_commit — its manifest is derived from a
+    specific parent version, so a loser either rebases onto a
+    provably disjoint winner or retries via _retry_dml with a FULL
+    recompute against the fresh snapshot. ``overwrite``
     is reserved for same-version metadata rewrites that are not
     commits (maintain_table's retired-set drain)."""
     v = manifest["version"]
@@ -1397,32 +1397,45 @@ def _dv_mask(
     return out if has_file else out.drop("__dv_file")
 
 
-def _read_current_tagged(wh: Warehouse, database: str, table: str):
-    """The latest snapshot's VISIBLE rows with a ``__file`` column,
-    for COW DML's affected-file tagging. input_file_name() must bind
-    on the raw scan BEFORE the deletion-vector anti-join: after any
-    exchange it evaluates to '' (Spark's documented behavior), and a
+def _tagged_rows(
+    wh: Warehouse, database: str, table: str, manifest: dict, schema
+) -> DataFrame:
+    """``manifest``'s VISIBLE rows with a ``__file`` column, for DML's
+    matched-row tagging. input_file_name() must bind on the raw scan
+    BEFORE the deletion-vector anti-join: after any exchange it
+    evaluates to '' (Spark's documented behavior), and a
     non-broadcast DV join would silently un-tag every row — so this
-    helper tags first, masks second. Returns (manifest, schema,
-    tagged_df)."""
+    helper tags first, masks second."""
     from pyspark.sql import functions as F
-    from pyspark.sql import types as T
 
-    vs = versions(wh, database, table)
-    manifest = _manifest(wh, database, table, vs[-1])
-    schema = T.StructType.fromJson(json.loads(manifest["schema"]))
     base = wh._path(database, table)
     names = _manifest_files(wh, database, table, manifest)
     if not names:
-        empty = wh.spark.createDataFrame([], schema).withColumn(
+        return wh.spark.createDataFrame([], schema).withColumn(
             "__file", F.lit(None).cast("string")
         )
-        return manifest, schema, empty
     raw = wh.spark.read.schema(schema).parquet(
         *[f"{base}/{n}" for n in names]
     )
     tagged = raw.withColumn("__file", F.input_file_name())
-    return manifest, schema, _dv_mask(wh, database, table, manifest, tagged)
+    return _dv_mask(wh, database, table, manifest, tagged)
+
+
+def _aligned(batch: DataFrame, schema) -> DataFrame:
+    """``batch`` in the table's column order and types: try_cast per
+    column, missing columns NULL (the MERGE/OVERWRITE alignment)."""
+    from pyspark.sql import functions as F
+
+    return batch.select(
+        *[
+            (
+                F.col(f.name).try_cast(f.dataType)
+                if f.name in batch.columns
+                else F.lit(None).cast(f.dataType)
+            ).alias(f.name)
+            for f in schema.fields
+        ]
+    )
 
 
 def commit_snapshot(
@@ -1971,16 +1984,7 @@ def _overwrite_versioned_once(
             f"overwrite cannot add columns {extra}; evolve the table "
             "with a regular append first"
         )
-    aligned = batch.select(
-        *[
-            (
-                F.col(f.name).try_cast(f.dataType)
-                if f.name in batch.columns
-                else F.lit(None).cast(f.dataType)
-            ).alias(f.name)
-            for f in schema.fields
-        ]
-    )
+    aligned = _aligned(batch, schema)
     prev_files = _manifest_files(wh, database, table, prev)
     changes: list[str] | None
     if cdc:
@@ -2036,7 +2040,7 @@ def _overwrite_versioned_once(
         # have nothing left to mask and must not leak onto the new
         # rows' id space (snowflake ids never repeat, but carrying
         # dead vectors forever is planner noise)
-        dvs_override=([], 0),
+        clear_dvs=True,
     )
     return next_v
 
@@ -3040,11 +3044,15 @@ def delete_tag(
     )
 
 
-#: file-name prefixes used by COW rewrites (_cow_rewrite callers).
-#: commit_snapshot refuses to ADOPT new files with these prefixes from
-#: a directory listing — they become visible only through their own
-#: DML commit's manifest (see the adoption guard in commit_snapshot).
-_COW_PREFIXES = ("cow-", "ow-", "pack-", "compact-", "txnappend-")
+#: file-name prefixes used by COW rewrites and MoR postimage/batch
+#: files (_cow_rewrite callers). commit_snapshot refuses to ADOPT new
+#: files with these prefixes from a directory listing — they become
+#: visible only through their own DML commit's manifest (see the
+#: adoption guard in commit_snapshot); an adopted MoR file from a
+#: CAS-losing attempt would duplicate its rows.
+_COW_PREFIXES = (
+    "cow-", "ow-", "pack-", "compact-", "txnappend-", "morupd-", "mormrg-",
+)
 
 
 def _cow_rewrite(wh: Warehouse, base: str, df: DataFrame,
@@ -3167,27 +3175,58 @@ def _rebase_parent(
     return latest, winner_added, dv_added
 
 
-def _added_scan_validator(wh: Warehouse, base: str, schema, probe):
+def _match_rows(df: DataFrame, match, keep: bool = False) -> DataFrame:
+    """The rows of ``df`` a DML ``match`` selects — or, with ``keep``,
+    their exact complement. ``match`` is a normalized predicate Column
+    (NULL already folded to false, see _dml) or a ``(keys_df,
+    key_col)`` pair probed by semi/anti join. The one definition of
+    "matched row" for tagging, change capture, survivor rewrites and
+    rebase validation."""
+    if isinstance(match, tuple):
+        keys_df, key_col = match
+        return df.join(keys_df, key_col, "anti" if keep else "semi")
+    return df.filter(~match if keep else match)
+
+
+def _set_cols(df: DataFrame, schema, sets: dict, where=None) -> DataFrame:
+    """``df`` in table column order with an UPDATE's normalized SET
+    map applied — to every row, or only where the ``where`` Column
+    holds (a COW rewrite updates matched rows in place)."""
+    from pyspark.sql import functions as F
+
+    return df.select(
+        *[
+            (
+                (
+                    sets[f.name]
+                    if where is None
+                    else F.when(where, sets[f.name]).otherwise(
+                        F.col(f.name)
+                    )
+                )
+                if f.name in sets
+                else F.col(f.name)
+            ).alias(f.name)
+            for f in schema.fields
+        ]
+    )
+
+
+def _added_scan_validator(wh: Warehouse, base: str, schema, match):
     """``validate_added`` factory for _cow_commit: True iff NONE of
     the named winner-added files holds a row this op would have
-    matched — ``probe`` is either a boolean Column (predicate DML) or
-    a ``(keys_df, key_col)`` pair (key-set DML / MERGE, probed via
-    semi-join). This is the churn-sized serializability validation
-    scan (Iceberg's validateNoConflictingData, public design): it
-    reads ONLY the winner's new files, and parquet row-group stats
-    give the zone-map fast path for free — a predicate/key span
-    outside a file's ranges costs a footer read, no row scan."""
+    matched (_match_rows). This is the churn-sized serializability
+    validation scan (Iceberg's validateNoConflictingData, public
+    design): it reads ONLY the winner's new files, and parquet
+    row-group stats give the zone-map fast path for free — a
+    predicate/key span outside a file's ranges costs a footer read,
+    no row scan."""
 
     def _validate(names: list[str]) -> bool:
         df = wh.spark.read.schema(schema).parquet(
             *[f"{base}/{n}" for n in names]
         )
-        if isinstance(probe, tuple):
-            keys_df, key_col = probe
-            hit = df.join(keys_df, key_col, "semi")
-        else:
-            hit = df.filter(probe)
-        return hit.limit(1).count() == 0
+        return _match_rows(df, match).limit(1).count() == 0
 
     return _validate
 
@@ -3201,15 +3240,16 @@ def _cow_commit(
     rewritten: list[str],
     changes: list[str] | None,
     summary: dict | None = None,
-    dvs_override: tuple | None = None,
+    clear_dvs: bool = False,
     rebase: bool = True,
     read_files: set | None = None,
     validate_added=None,
     dvs_add: tuple | None = None,
 ) -> int:
-    """Commit a COW file swap (``affected`` out, ``rewritten`` in) as
-    the next version — the single atomic manifest PUT shared by
-    DELETE/MERGE/OVERWRITE. Untouched files carry over with their
+    """Commit a file swap (``affected`` out, ``rewritten`` in) as the
+    next version — the single atomic manifest PUT shared by every DML
+    (_dml, COW and MoR), OVERWRITE, compaction and
+    apply_deletion_vectors. Untouched files carry over with their
     stats; replaced files join the cumulative ``retired`` set so
     commit_snapshot never re-adopts them.
 
@@ -3337,12 +3377,11 @@ def _cow_commit(
         # commits against — which is what lets a MoR update rebase
         # past a winner that also grew the vectors (the old prebuilt
         # override was exact only under prev, forcing dv-equality in
-        # the rebase precondition). dvs_override=(list, rows[, files])
-        # sets state verbatim — ([], 0) is the clear form for
+        # the rebase precondition). clear_dvs drops the vectors —
         # overwrite (all old rows replaced) and apply_deletion_vectors
-        # (tombstones physically applied); override callers keep the
-        # dv-equality rebase precondition, so a prev-built override
-        # stays exact on every attempt.
+        # (tombstones physically applied); those callers keep the
+        # dv-equality rebase precondition, so the clear stays exact
+        # on every attempt.
         if dvs_add is not None:
             new_dvs = list(parent.get("dvs", [])) + list(dvs_add[0])
             if new_dvs:
@@ -3360,16 +3399,7 @@ def _cow_commit(
                         set(parent.get("dv_files", []))
                         | set(dvs_add[2])
                     )
-        elif dvs_override is not None:
-            if dvs_override[0]:
-                manifest["dvs"] = list(dvs_override[0])
-                manifest["dv_rows"] = int(dvs_override[1])
-                if (
-                    len(dvs_override) > 2
-                    and dvs_override[2] is not None
-                ):
-                    manifest["dv_files"] = sorted(dvs_override[2])
-        elif parent.get("dvs"):
+        elif not clear_dvs and parent.get("dvs"):
             manifest["dvs"] = parent["dvs"]
             manifest["dv_rows"] = parent.get("dv_rows", 0)
             if "dv_files" in parent:
@@ -3397,7 +3427,7 @@ def _cow_commit(
             wh, database, table, prev, guard,
             # only the grow-form caller knows how to re-assemble dv
             # state onto a moved parent; everyone else still needs
-            # dv equality (their override/carry was built under prev)
+            # dv equality (their clear/carry was decided under prev)
             allow_dv_growth=dvs_add is not None,
         )
         if found is None:
@@ -3454,30 +3484,68 @@ def _cow_commit(
     raise last
 
 
-def _delete_where_once(
+def _dml(
     wh: Warehouse,
     database: str,
     table: str,
-    predicate,
+    match,
+    action,
+    mode: str,
     summary: dict | None = None,
-) -> tuple[int, int]:
-    """One optimistic attempt of delete_where (public wrapper below
-    adds conflict retry). Row-level DELETE via copy-on-write, the takedown primitive a
-    training-data pipeline needs (opt-outs, contamination, PII): files
-    containing matching rows are rewritten WITHOUT them; untouched
-    files are carried into the new manifest as-is. Returns
-    (new_version, rows_deleted).
+) -> tuple:
+    """One optimistic attempt of any row-level DML; the seven public
+    entry points (delete_where, delete_keys, update_where,
+    merge_upsert and the three ``_mor`` twins) call it through
+    _retry_dml. Returns (new_version, n_matched) — plus n_inserted
+    for an upsert — or the current version with zero counts when
+    nothing matched and nothing lands.
 
-    Shape: one filtered scan tags affected files via
-    ``input_file_name()`` (file-level pruning — parquet min/max stats
-    prune most files when the predicate correlates with the
-    sort-on-write key); only affected files re-read and rewrite. Old
-    versions still SEE the deleted rows (time travel is the audit
-    trail); expire + compact to physically reclaim.
+    ``match`` picks the rows: a predicate (SQL string or Column) or a
+    ``(keys_df, key_col)`` pair. A predicate is normalized ONCE to
+    ``coalesce(p, false)`` — Delta DELETE/UPDATE semantics, a row
+    matches iff the predicate is TRUE, so matched and kept sets are
+    exact complements (``filter(p)``/``filter(~p)`` would both drop
+    NULL rows: physically deleted, never emitted to the change feed).
+    A key frame stays a DataFrame end to end — aligned to the key
+    column's type with try_cast, probed by semi/anti joins — so a
+    10^6-key takedown plans like any join instead of a driver IN-list.
+    _match_rows is the one definition of "matched row" for tagging,
+    change capture, survivor rewrites and rebase validation.
 
-    Requires the table to be snapshot-managed (at least one version).
-    """
+    ``action``: ``"delete"``; a SET dict (UPDATE: targets must be
+    existing columns, values cast to the column type, ``__row_id``
+    immutable — _normalize_set_exprs); or an upsert batch DataFrame
+    (MERGE, latest-wins: matched rows are replaced, every batch row
+    lands, columns aligned with try_cast, missing ones NULL).
+
+    ``mode``: ``"cow"`` (copy-on-write) rewrites every file holding a
+    matched row — survivors (an UPDATE's SET applied in place) plus an
+    upsert batch — and swaps them for the old files; ``"mor"``
+    (merge-on-read, Iceberg position deletes / Delta DVs) leaves the
+    data files untouched, tombstones the matched (file, __row_id)
+    pairs in a deletion-vector sidecar and appends postimages or the
+    batch as new files, O(matched rows) instead of O(affected bytes).
+    MoR needs the __row_id stamp; the appended copies keep their ids,
+    which stay visible because tombstones bind to the (file, row)
+    pair (the ghost-merge contract, _dv_mask).
+
+    Pipeline, for every form: read the version list and the manifest
+    once; tag the visible rows with their file (_tagged_rows); persist
+    the matched rows (churn-sized) and collect per-file match counts
+    in one aggregation; write the rewrite or the tombstones; capture
+    the exact change rows — matched preimages as ``delete``, SET
+    postimages or the batch as ``insert``, the two-type contract
+    read_changes speaks; then commit through _cow_commit against the
+    manifest the rows were tagged from. Raw file re-reads go through
+    the standing deletion-vector mask, so a MoR-deleted row is never
+    rewritten, matched or re-emitted. Nothing is visible before the
+    manifest PUT; older versions keep the old rows (time travel is
+    the audit trail). A lost CAS rebases when _cow_commit can prove
+    the winner disjoint (validate_added with this match; MoR adds the
+    grow-form dv check) and otherwise raises to _retry_dml, which
+    recomputes against the winner."""
     from pyspark.sql import functions as F
+    from pyspark.sql import types as T
 
     vs = versions(wh, database, table)
     if not vs:
@@ -3485,296 +3553,141 @@ def _delete_where_once(
             f"{database}.{table} is not snapshot-managed; "
             "commit_snapshot first"
         )
-    base = wh._path(database, table)
-    # visible rows tagged with their file (DV-masked AFTER the tag —
-    # see _read_current_tagged for why the order matters)
-    prev_m, schema, tagged = _read_current_tagged(wh, database, table)
-    # Delta DELETE semantics: a row is deleted iff the predicate is
-    # TRUE; NULL evaluates to not-deleted. Normalizing once here makes
-    # delete and keep EXACT complements (filter(p) / filter(~p) both
-    # drop NULL rows — which would physically delete them while never
-    # emitting them to the change files, silently diverging the CDC
-    # feed from the table).
-    pred = F.expr(predicate) if isinstance(predicate, str) else predicate
-    pred_true = F.coalesce(pred.cast("boolean"), F.lit(False))
-    affected = sorted(
-        r["__file"].rsplit("/", 1)[-1]
-        for r in tagged.filter(pred_true)
-        .select("__file")
-        .distinct()
-        .collect()
-    )
-    if not affected:
-        return versions(wh, database, table)[-1], 0
-    # change-data-feed capture (Delta CDF's public design): the exact
-    # deleted rows are known right here — persist them as change files
-    # so the streaming CDC source replays this commit from parquet on
-    # EXECUTORS instead of re-diffing manifests on the driver. Cost:
-    # one extra filtered scan of only the affected files (churn-
-    # proportional); invisible until the manifest PUT below.
-    # raw file re-reads must re-apply the standing deletion vectors:
-    # a file can hold rows already MoR-deleted — without the mask the
-    # change capture would re-emit their deletes to the CDC feed, and
-    # the keep set would copy them into the rewritten file
-    changes = _write_changes(
-        wh,
-        database,
-        table,
-        _dv_mask(
-            wh, database, table, prev_m,
-            wh.spark.read.schema(schema)
-            .parquet(*[f"{base}/{n}" for n in affected]),
-        )
-        .filter(pred_true)
-        .withColumn("_change_type", F.lit("delete")),
-    )
-    keep = _dv_mask(
-        wh, database, table, prev_m,
-        wh.spark.read.schema(schema)
-        .parquet(*[f"{base}/{n}" for n in affected]),
-    ).filter(~pred_true)
-    # rewrite survivors into fresh files, then commit a manifest that
-    # swaps affected -> rewritten; data-file writes before the
-    # manifest PUT are invisible until the commit, so readers never
-    # see a partial delete
-    rewritten = _cow_rewrite(wh, base, keep)
     prev = _manifest(wh, database, table, vs[-1])
-    next_v = _cow_commit(
-        wh, database, table, prev, affected, rewritten, changes,
-        summary=summary,
-        # serializable rebase (r14): a conflicting winner's new files
-        # must prove they hold no predicate-matching row, else the
-        # delete recomputes and removes those rows too
-        validate_added=_added_scan_validator(wh, base, schema, pred_true),
-    )
-    # deleted-row count from the change files' parquet FOOTERS (row
-    # counts only, no data scan) — the old before/after counting cost
-    # two FULL table scans per delete, table-size work for a
-    # churn-size operation
-    n_deleted = (
-        wh.spark.read.parquet(
-            *[
-                f"{_snap_dir(wh, database, table)}/{rel}"
-                for rel in changes
-            ]
-        ).count()
-        if changes
-        else 0
-    )
-    return next_v, n_deleted
-
-
-def _delete_keys_once(
-    wh: Warehouse,
-    database: str,
-    table: str,
-    keys: DataFrame,
-    key_col: str,
-    summary: dict | None = None,
-) -> tuple[int, int]:
-    """One optimistic attempt of delete_keys (public wrapper below
-    adds conflict retry). Row-level DELETE by KEY SET via copy-on-write: every row whose
-    ``key_col`` appears in ``keys`` is removed. Returns
-    (new_version, rows_deleted).
-
-    This is the mass-takedown form of delete_where: the key set stays
-    a DataFrame END-TO-END — affected files tag via a semi-join,
-    survivors via an anti-join (AQE broadcasts the key side when it
-    is small, shuffles when it is not) — so a 10^6-row GDPR/opt-out
-    delete plans like any join instead of becoming a 10^6-element
-    Catalyst IN-list literal that stalls the analyzer and bloats the
-    driver. Same visibility contract as delete_where: files
-    containing matching rows are rewritten without them, the manifest
-    PUT is the single atomic commit point, old versions still see the
-    deleted rows, and the exact deleted rows land in the change feed.
-    """
-    from pyspark.sql import functions as F
-
-    vs = versions(wh, database, table)
-    if not vs:
-        raise ValueError(
-            f"{database}.{table} is not snapshot-managed; "
-            "commit_snapshot first"
-        )
+    schema = T.StructType.fromJson(json.loads(prev["schema"]))
     base = wh._path(database, table)
-    # visible rows tagged with their file (DV-masked AFTER the tag —
-    # see _read_current_tagged for why the order matters)
-    prev_m, schema, tagged = _read_current_tagged(wh, database, table)
-    if key_col not in schema.names:
-        raise ValueError(
-            f"key column {key_col!r} not in {database}.{table} "
-            f"columns {schema.names}"
+    upsert = isinstance(action, DataFrame)
+    sets = action if isinstance(action, dict) else None
+    if mode == "mor" and "__row_id" not in schema.names:
+        kind, cow = (
+            ("merge", "merge_upsert") if upsert
+            else ("update", "update_where") if sets is not None
+            else ("delete", "delete_where")
         )
-    # align the key frame to the table's key type so the joins below
-    # are equi-joins on identical types (no implicit cross-type casts)
-    key_type = schema[key_col].dataType
-    keys_d = (
-        keys.select(F.col(keys.columns[0]).alias(key_col))
-        if len(keys.columns) == 1 and key_col not in keys.columns
-        else keys.select(key_col)
-    ).select(F.col(key_col).try_cast(key_type).alias(key_col)).distinct()
-
-    affected = sorted(
-        r["__file"].rsplit("/", 1)[-1]
-        for r in tagged.join(keys_d, key_col, "semi")
-        .select("__file")
-        .distinct()
-        .collect()
-    )
-    if not affected:
-        return vs[-1], 0
-
-    # standing deletion vectors re-apply on the raw re-read (same
-    # reason as _delete_where_once: no re-emitted CDC deletes, no
-    # tombstoned rows copied into the rewrite)
-    affected_df = _dv_mask(
-        wh, database, table, prev_m,
-        wh.spark.read.schema(schema).parquet(
-            *[f"{base}/{n}" for n in affected]
-        ),
-    )
-    # change feed: the exact deleted rows (delete preimages), then
-    # survivors rewritten — both churn-proportional (affected files
-    # only); everything is invisible until the manifest PUT
-    changes = _write_changes(
-        wh,
-        database,
-        table,
-        affected_df.join(keys_d, key_col, "semi").withColumn(
-            "_change_type", F.lit("delete")
-        ),
-    )
-    rewritten = _cow_rewrite(
-        wh, base, affected_df.join(keys_d, key_col, "anti")
-    )
-    prev = _manifest(wh, database, table, vs[-1])
-    next_v = _cow_commit(
-        wh, database, table, prev, affected, rewritten, changes,
-        summary=summary,
-        # serializable rebase (r14): winner-added files must prove
-        # they hold none of the takedown keys, else recompute
-        validate_added=_added_scan_validator(
-            wh, base, schema, (keys_d, key_col)
-        ),
-    )
-    n_deleted = (
-        wh.spark.read.parquet(
-            *[
-                f"{_snap_dir(wh, database, table)}/{rel}"
-                for rel in changes
-            ]
-        ).count()
-        if changes
-        else 0
-    )
-    return next_v, n_deleted
-
-
-def _merge_upsert_once(
-    wh: Warehouse,
-    database: str,
-    table: str,
-    updates: DataFrame,
-    key_col: str,
-    summary: dict | None = None,
-) -> tuple[int, int, int]:
-    """One optimistic attempt of merge_upsert (public wrapper below
-    adds conflict retry). MERGE (latest-wins upsert) via copy-on-write: rows whose
-    ``key_col`` matches an update are REPLACED, unmatched update rows
-    INSERT, files without any matching key carry over untouched.
-    Returns (new_version, n_updated, n_inserted) — the dimension-table
-    maintenance primitive the append-only reference lacks.
-
-    Shape: one semi-join scan tags affected files (parquet min/max on
-    the sort-on-write key prunes most); survivors = affected rows
-    anti-joined on update keys; rewrite = survivors + ALL update rows
-    (aligned to the table schema, try_cast semantics). Commit is the
-    usual atomic manifest PUT; the pre-merge version stays readable.
-    """
-    from pyspark.sql import functions as F
-
-    vs = versions(wh, database, table)
-    if not vs:
         raise ValueError(
-            f"{database}.{table} is not snapshot-managed; "
-            "commit_snapshot first"
+            f"merge-on-read {kind} needs the __row_id stamp "
+            f"({database}.{table} lacks it); use {cow} (COW)"
         )
-    base = wh._path(database, table)
-    # visible rows tagged with their file (DV-masked AFTER the tag —
-    # see _read_current_tagged for why the order matters)
-    prev_m, schema, tagged = _read_current_tagged(wh, database, table)
-    keys = updates.select(F.col(key_col)).distinct()
-
-    affected = sorted(
-        r["__file"].rsplit("/", 1)[-1]
-        for r in tagged.join(keys, key_col, "semi")
-        .select("__file")
-        .distinct()
-        .collect()
-    )
-    aligned_updates = updates.select(
-        *[
-            F.col(f.name).try_cast(f.dataType).alias(f.name)
-            if f.name in updates.columns
-            else F.lit(None).cast(f.dataType).alias(f.name)
-            for f in schema.fields
-        ]
-    )
-    if affected:
-        # standing deletion vectors re-apply on the raw re-reads
-        # (same reason as _delete_where_once: tombstoned rows must
-        # neither survive into the rewrite nor emit CDC preimages)
-        survivors = _dv_mask(
-            wh, database, table, prev_m,
-            wh.spark.read.schema(schema)
-            .parquet(*[f"{base}/{n}" for n in affected]),
-        ).join(keys, key_col, "anti")
-        rewrite = survivors.unionByName(aligned_updates)
-        replaced = _dv_mask(
-            wh, database, table, prev_m,
-            wh.spark.read.schema(schema)
-            .parquet(*[f"{base}/{n}" for n in affected]),
-        ).join(keys, key_col, "semi")
+    if isinstance(match, tuple):
+        keys, key_col = match
+        if key_col not in schema.names:
+            raise ValueError(
+                f"key column {key_col!r} not in {database}.{table} "
+                f"columns {schema.names}"
+            )
+        keys = (
+            keys.select(F.col(keys.columns[0]).alias(key_col))
+            if len(keys.columns) == 1 and key_col not in keys.columns
+            else keys.select(key_col)
+        )
+        match = (
+            keys.select(
+                F.col(key_col).try_cast(schema[key_col].dataType)
+                .alias(key_col)
+            ).distinct(),
+            key_col,
+        )
     else:
-        rewrite = aligned_updates
-        replaced = wh.spark.createDataFrame([], schema)
-    # update/insert counts from the AFFECTED files only — a matching
-    # key can only live in an affected file (that is what made it
-    # affected), so these counts are churn-proportional; the old
-    # current-vs-keys joins cost two full table scans per merge
-    n_updated = replaced.count()
-    n_inserted = updates.join(
-        replaced.select(key_col).distinct(), key_col, "anti"
-    ).count()
-    # change-data-feed capture: replaced rows as the delete preimages,
-    # every update row as an insert postimage (Delta CDF semantics —
-    # an update whose values happen to equal the existing row still
-    # emits its delete/insert pair here, whereas the manifest-diff
-    # batch read_changes cancels it; both are valid change feeds and
-    # converge to the same applied state). Churn-proportional job;
-    # invisible until the manifest PUT.
-    changes = _write_changes(
-        wh,
-        database,
-        table,
-        replaced.withColumn("_change_type", F.lit("delete")).unionByName(
-            aligned_updates.withColumn("_change_type", F.lit("insert"))
-        ),
-    )
+        pred = F.expr(match) if isinstance(match, str) else match
+        match = F.coalesce(pred.cast("boolean"), F.lit(False))
+    if sets is not None:
+        sets = _normalize_set_exprs(schema, sets)
+    batch = _aligned(action, schema) if upsert else None
 
-    rewritten = _cow_rewrite(wh, base, rewrite)
-    prev = _manifest(wh, database, table, vs[-1])
+    hits = _match_rows(
+        _tagged_rows(wh, database, table, prev, schema), match
+    ).persist()
+    try:
+        per_file = {
+            r["__file"].rsplit("/", 1)[-1]: r["count"]
+            for r in hits.groupBy("__file").count().collect()
+        }
+        n_matched = sum(per_file.values())
+        n_batch = n_inserted = 0
+        if upsert:
+            key_col = match[1]
+            hit_keys = hits.select(key_col).distinct()
+            counts = batch.join(
+                hit_keys.withColumn("__hit", F.lit(True)), key_col, "left"
+            ).agg(
+                F.count(F.lit(1)).alias("n"),
+                F.count_if(F.col("__hit").isNull()).alias("ins"),
+            ).first()
+            n_batch, n_inserted = counts["n"], counts["ins"]
+        if not per_file and not n_batch:
+            return (vs[-1], 0, 0) if upsert else (vs[-1], 0)
+        pre = hits.drop("__file")
+        post = batch if upsert else (
+            _set_cols(pre, schema, sets) if sets is not None else None
+        )
+        dvs: list[str] = []
+        if mode == "mor":
+            affected: list[str] = []
+            if per_file:
+                dvs = _write_dv(
+                    wh, database, table,
+                    hits.select(
+                        F.element_at(F.split("__file", "/"), -1)
+                        .alias("file"),
+                        F.col("__row_id").alias("rid"),
+                    ),
+                )
+            # the appended batch is O(matched or batch rows): bound
+            # its file count (~1M rows/file) instead of fanning a
+            # 3-row correction into one near-empty file per partition
+            n_post = n_batch if upsert else n_matched
+            rewritten = (
+                _cow_rewrite(
+                    wh, base,
+                    post.coalesce(max(1, -(-n_post // 1_000_000))),
+                    prefix="mormrg" if upsert else "morupd",
+                )
+                if post is not None
+                else []
+            )
+        else:
+            affected = sorted(per_file)
+            cur = (
+                _dv_mask(
+                    wh, database, table, prev,
+                    wh.spark.read.schema(schema).parquet(
+                        *[f"{base}/{n}" for n in affected]
+                    ),
+                )
+                if affected
+                else None
+            )
+            if sets is not None:
+                keep = _set_cols(cur, schema, sets, where=match)
+            elif cur is None:  # an upsert that only inserts
+                keep = batch
+            else:
+                keep = _match_rows(cur, match, keep=True)
+                if upsert:
+                    keep = keep.unionByName(batch)
+            rewritten = _cow_rewrite(wh, base, keep)
+        change_rows = pre.withColumn("_change_type", F.lit("delete"))
+        if post is not None:
+            change_rows = change_rows.unionByName(
+                post.withColumn("_change_type", F.lit("insert"))
+            )
+        changes = _write_changes(wh, database, table, change_rows)
+    finally:
+        hits.unpersist()
     next_v = _cow_commit(
         wh, database, table, prev, affected, rewritten, changes,
         summary=summary,
-        # serializable rebase (r14): MERGE's result depends on which
-        # keys EXIST — winner-added files must prove they hold none
-        # of this merge's keys (else matched-vs-insert could flip)
-        validate_added=_added_scan_validator(
-            wh, base, schema, (keys, key_col)
-        ),
+        # MoR tombstones bind to (file, row): the matched files must
+        # stay live across a rebase or the new dv entries strand (for
+        # COW they are the affected set already)
+        read_files=set(per_file),
+        validate_added=_added_scan_validator(wh, base, schema, match),
+        # grow form: OUR dv delta, assembled onto whatever parent the
+        # commit lands on — what lets a MoR op rebase past a disjoint
+        # concurrent MoR op
+        dvs_add=(dvs, n_matched, set(per_file)) if mode == "mor" else None,
     )
-    return next_v, n_updated, n_inserted
+    return (next_v, n_matched, n_inserted) if upsert else (next_v, n_matched)
 
 
 def overwrite_versioned(
@@ -3810,7 +3723,7 @@ def overwrite_versioned(
 #: conflicts with EVERY commit landing inside that window, and under
 #: sustained same-driver concurrency (N writer threads + a compaction
 #: cadence) one writer can starve past any finite budget — measured
-#: in mor_concurrent_churn_r13 before this. Retries therefore
+#: in the r13 concurrent MoR churn rehearsal (PERF.md) before this. Retries therefore
 #: ESCALATE to a per-table lock: first attempts stay lock-free (zero
 #: cost in the uncontended case), retrying writers serialize with
 #: each other, so each converges instead of re-racing. The lock is
@@ -3933,15 +3846,15 @@ def delete_where(
     predicate,
     summary: dict | None = None,
 ) -> tuple[int, int]:
-    """Row-level DELETE via copy-on-write — see _delete_where_once
+    """Row-level DELETE via copy-on-write — see _dml
     for semantics (Delta DELETE NULL handling, CDC preimages,
     time-travel audit trail). This wrapper retries on commit
     conflicts with a FULL recompute against the fresh snapshot
     (_retry_dml), so a takedown racing the ingest stream's appends
     lands serializably after them instead of erroring out."""
     return _retry_dml(
-        lambda: _delete_where_once(
-            wh, database, table, predicate, summary=summary
+        lambda: _dml(
+            wh, database, table, predicate, "delete", "cow", summary
         ),
         lock_key=wh._path(database, table),
     )
@@ -3956,13 +3869,13 @@ def delete_keys(
     summary: dict | None = None,
 ) -> tuple[int, int]:
     """Row-level DELETE by KEY SET via copy-on-write — see
-    _delete_keys_once for semantics (keys-frame anti-join, never a
+    _dml for semantics (keys-frame anti-join, never a
     driver IN-list). Conflict-retries with full recompute
     (_retry_dml): the mass-takedown case is exactly the one that
     runs concurrently with live ingest."""
     return _retry_dml(
-        lambda: _delete_keys_once(
-            wh, database, table, keys, key_col, summary=summary
+        lambda: _dml(
+            wh, database, table, (keys, key_col), "delete", "cow", summary
         ),
         lock_key=wh._path(database, table),
     )
@@ -4000,110 +3913,6 @@ def _normalize_set_exprs(schema, set_exprs: dict) -> dict:
     return out
 
 
-def _update_where_once(
-    wh: Warehouse,
-    database: str,
-    table: str,
-    predicate,
-    set_exprs: dict,
-    summary: dict | None = None,
-) -> tuple[int, int]:
-    """One optimistic attempt of update_where (public wrapper below
-    adds conflict retry). Row-level UPDATE via copy-on-write — the
-    ``UPDATE t SET c = expr WHERE pred`` DML Delta/Iceberg ship and
-    this warehouse lacked (merge_upsert covers keyed upserts; this is
-    the predicate form): files containing matching rows rewrite with
-    the SET applied to exactly those rows; untouched files carry
-    over. Returns (new_version, rows_updated).
-
-    Same NULL semantics as delete_where: a row updates iff the
-    predicate is TRUE (NULL = untouched), normalized once so the
-    updated and kept sets are exact complements. CDC captures the
-    update as preimage DELETE + postimage INSERT rows in one change
-    set — the two-type contract every consumer of this feed already
-    speaks (read_changes derives the same pairs for file diffs;
-    Delta's four-type CDF is the documented divergence). Raw file
-    re-reads apply the standing deletion-vector mask, so a
-    MoR-deleted row is neither updated, re-emitted, nor copied into
-    the rewritten file.
-    """
-    from pyspark.sql import functions as F
-
-    vs = versions(wh, database, table)
-    if not vs:
-        raise ValueError(
-            f"{database}.{table} is not snapshot-managed; "
-            "commit_snapshot first"
-        )
-    base = wh._path(database, table)
-    prev_m, schema, tagged = _read_current_tagged(wh, database, table)
-    sets = _normalize_set_exprs(schema, set_exprs)
-    pred = F.expr(predicate) if isinstance(predicate, str) else predicate
-    pred_true = F.coalesce(pred.cast("boolean"), F.lit(False))
-    affected = sorted(
-        r["__file"].rsplit("/", 1)[-1]
-        for r in tagged.filter(pred_true)
-        .select("__file")
-        .distinct()
-        .collect()
-    )
-    if not affected:
-        return vs[-1], 0
-
-    def read_affected():
-        return _dv_mask(
-            wh, database, table, prev_m,
-            wh.spark.read.schema(schema)
-            .parquet(*[f"{base}/{n}" for n in affected]),
-        )
-
-    def apply_sets(df):
-        return df.select(
-            *[
-                (
-                    F.when(pred_true, sets[f.name])
-                    .otherwise(F.col(f.name))
-                    .alias(f.name)
-                    if f.name in sets
-                    else F.col(f.name)
-                )
-                for f in schema.fields
-            ]
-        )
-
-    pre = (
-        read_affected()
-        .filter(pred_true)
-        .withColumn("_change_type", F.lit("delete"))
-    )
-    post = (
-        apply_sets(read_affected().filter(pred_true))
-        .withColumn("_change_type", F.lit("insert"))
-    )
-    changes = _write_changes(wh, database, table, pre.unionAll(post))
-    rewritten = _cow_rewrite(wh, base, apply_sets(read_affected()))
-    prev = _manifest(wh, database, table, vs[-1])
-    next_v = _cow_commit(
-        wh, database, table, prev, affected, rewritten, changes,
-        summary=summary,
-        # serializable rebase (r14): same contract as delete_where —
-        # a winner-added predicate-matching row forces the recompute
-        # that updates it too
-        validate_added=_added_scan_validator(wh, base, schema, pred_true),
-    )
-    n_changed = (
-        wh.spark.read.parquet(
-            *[
-                f"{_snap_dir(wh, database, table)}/{rel}"
-                for rel in changes
-            ]
-        ).count()
-        if changes
-        else 0
-    )
-    return next_v, n_changed // 2  # pre + post pairs
-
-
 def update_where(
     wh: Warehouse,
     database: str,
@@ -4112,130 +3921,16 @@ def update_where(
     set_exprs: dict,
     summary: dict | None = None,
 ) -> tuple[int, int]:
-    """Row-level UPDATE via copy-on-write — see _update_where_once
+    """Row-level UPDATE via copy-on-write — see _dml
     for semantics (Delta UPDATE NULL handling and implicit casts,
     preimage+postimage CDC, time-travel audit trail).
     Conflict-retries with full recompute (_retry_dml)."""
     return _retry_dml(
-        lambda: _update_where_once(
-            wh, database, table, predicate, set_exprs, summary=summary
+        lambda: _dml(
+            wh, database, table, predicate, set_exprs, "cow", summary
         ),
         lock_key=wh._path(database, table),
     )
-
-
-def _update_where_mor_once(
-    wh: Warehouse,
-    database: str,
-    table: str,
-    predicate,
-    set_exprs: dict,
-    summary: dict | None = None,
-) -> tuple[int, int]:
-    """One optimistic attempt of update_where_mor (wrapper below adds
-    conflict retry). Row-level UPDATE via MERGE-ON-READ: tombstone
-    the matched rows with a deletion vector and append their updated
-    copies as a NEW data file, in ONE commit — Iceberg's MoR UPDATE
-    shape (position deletes + new data files, public design). Cost is
-    O(matched rows) like delete_where_mor: a 3-row correction on a
-    1 GB file writes a KB sidecar plus a KB data file instead of
-    rewriting the gigabyte.
-
-    The updated copies keep their ``__row_id``: tombstones bind to
-    the (file, row) PAIR, so the new file's rows are visible through
-    the mask (the ghost-merge precedent — pair binding is what makes
-    re-inserting under a tombstoned id work). CDC emits the same
-    preimage-delete + postimage-insert pairs as the COW form at THIS
-    commit; readers see the update immediately through the standard
-    mask; apply_deletion_vectors / maintenance later drops the stale
-    physical copies. Requires the __row_id stamp (same contract as
-    delete_where_mor). Returns (new_version, rows_updated)."""
-    from pyspark.sql import functions as F
-
-    vs = versions(wh, database, table)
-    if not vs:
-        raise ValueError(
-            f"{database}.{table} is not snapshot-managed; "
-            "commit_snapshot first"
-        )
-    base = wh._path(database, table)
-    prev_m, schema, tagged = _read_current_tagged(wh, database, table)
-    if "__row_id" not in schema.names:
-        raise ValueError(
-            "merge-on-read update needs the __row_id stamp "
-            f"({database}.{table} lacks it); use update_where (COW)"
-        )
-    sets = _normalize_set_exprs(schema, set_exprs)
-    pred = F.expr(predicate) if isinstance(predicate, str) else predicate
-    pred_true = F.coalesce(pred.cast("boolean"), F.lit(False))
-    matched = tagged.filter(pred_true).persist()
-    try:
-        n_updated = matched.count()
-        if n_updated == 0:
-            return vs[-1], 0
-        dv_rel = _write_dv(
-            wh,
-            database,
-            table,
-            matched.select(
-                F.element_at(F.split("__file", "/"), -1).alias("file"),
-                F.col("__row_id").alias("rid"),
-            ),
-        )
-        touched = sorted(
-            r["f"]
-            for r in matched.select(
-                F.element_at(F.split("__file", "/"), -1).alias("f")
-            )
-            .distinct()
-            .collect()
-        )
-        pre = matched.drop("__file").withColumn(
-            "_change_type", F.lit("delete")
-        )
-        post = matched.drop("__file").select(
-            *[
-                (sets[f.name] if f.name in sets else F.col(f.name)).alias(
-                    f.name
-                )
-                for f in schema.fields
-            ]
-        )
-        # the postimage batch is O(matched rows) — bound its file
-        # count (~1M rows/file) instead of fanning a 3-row correction
-        # into one near-empty file per upstream partition
-        landed = _cow_rewrite(
-            wh, base,
-            post.coalesce(max(1, -(-n_updated // 1_000_000))),
-            prefix="morupd",
-        )
-        changes = _write_changes(
-            wh,
-            database,
-            table,
-            pre.unionAll(
-                post.withColumn("_change_type", F.lit("insert"))
-            ),
-        )
-    finally:
-        matched.unpersist()
-    next_v = _cow_commit(
-        wh, database, table, prev_m, set(), landed, changes,
-        summary=summary,
-        # MoR tombstones bind to (file, row): the touched files must
-        # stay live across any rebase or the new dv entries strand
-        read_files=set(touched),
-        # serializable rebase (r14): same contract as the COW UPDATE
-        validate_added=_added_scan_validator(wh, base, schema, pred_true),
-        # grow form (r15): OUR dv delta only — _cow_commit assembles
-        # it onto whatever parent each attempt commits against, which
-        # is what lets a MoR update REBASE past a concurrent MoR
-        # update on disjoint rows (the r14 prebuilt override forced
-        # dv-equality, so every MoR-vs-MoR conflict recomputed); the
-        # dv_files legacy rule is applied per-attempt inside
-        dvs_add=(dv_rel, n_updated, set(touched)),
-    )
-    return next_v, n_updated
 
 
 def update_where_mor(
@@ -4247,156 +3942,15 @@ def update_where_mor(
     summary: dict | None = None,
 ) -> tuple[int, int]:
     """Row-level UPDATE via merge-on-read deletion vectors + appended
-    postimages — see _update_where_mor_once for semantics and the
+    postimages — see _dml for semantics and the
     O(matched rows) cost contract. Conflict-retries with full
     recompute (_retry_dml)."""
     return _retry_dml(
-        lambda: _update_where_mor_once(
-            wh, database, table, predicate, set_exprs, summary=summary
+        lambda: _dml(
+            wh, database, table, predicate, set_exprs, "mor", summary
         ),
         lock_key=wh._path(database, table),
     )
-
-
-def _delete_where_mor_once(
-    wh: Warehouse,
-    database: str,
-    table: str,
-    predicate,
-    summary: dict | None = None,
-) -> tuple[int, int]:
-    """One optimistic attempt of delete_where_mor (wrapper below adds
-    conflict retry). Row-level DELETE via MERGE-ON-READ deletion
-    vectors (Delta DVs / Iceberg position deletes, public designs):
-    instead of rewriting every affected file (copy-on-write — O(bytes
-    of affected files)), commit a small (file, __row_id) tombstone
-    parquet and leave the data files untouched — O(matched rows).
-    At 100 TB this is the difference between a 3-row takedown
-    rewriting a 1 GB file and writing a few-KB sidecar.
-
-    Readers (read_snapshot) mask tombstoned rows with a broadcast
-    anti-join on the (file, __row_id) pair while the vector is small
-    (_DV_BROADCAST_ROWS); COW DML, compaction and appends all carry
-    the vector, and every rewrite reads through the mask so a moved
-    row is physically dropped and its entry goes dead (the
-    rewrite-must-mask invariant, _dv_mask).
-    The CDC feed gets the exact deleted rows at THIS commit (explicit
-    change files, same as COW delete). Physical reclaim is
-    apply_deletion_vectors (below) or any maintain_table. Time travel
-    to older versions still shows the rows — same audit-trail
-    contract as COW.
-
-    Same NULL semantics as delete_where: a row deletes iff the
-    predicate is TRUE. Requires the __row_id stamp (every
-    ingest-created table has it); tables without it must use the COW
-    path. Returns (new_version, rows_deleted)."""
-    from pyspark.sql import functions as F
-
-    vs = versions(wh, database, table)
-    if not vs:
-        raise ValueError(
-            f"{database}.{table} is not snapshot-managed; "
-            "commit_snapshot first"
-        )
-    prev_m, schema, tagged = _read_current_tagged(wh, database, table)
-    if "__row_id" not in schema.names:
-        raise ValueError(
-            "merge-on-read delete needs the __row_id stamp "
-            f"({database}.{table} lacks it); use delete_where (COW)"
-        )
-    pred = F.expr(predicate) if isinstance(predicate, str) else predicate
-    pred_true = F.coalesce(pred.cast("boolean"), F.lit(False))
-    # matched feeds three jobs (empty probe, tombstone write, change
-    # write) — persist once, release before returning (the cache
-    # discipline the r9 advisory pinned on dedup_index)
-    matched = tagged.filter(pred_true).persist()
-    try:
-        if matched.limit(1).count() == 0:
-            return vs[-1], 0
-        dv_files = _write_dv(
-            wh,
-            database,
-            table,
-            matched.select(
-                F.element_at(F.split("__file", "/"), -1).alias("file"),
-                F.col("__row_id").alias("rid"),
-            ),
-        )
-        # the AFFECTED data-file names (bounded by files-with-matches,
-        # the quantity MoR is O() of anyway) ride the manifest as
-        # ``dv_files`` so readers can plan file-scoped masking:
-        # unaffected files skip the per-row basename projection and
-        # anti-join entirely (read_snapshot), and CDC bootstrap knows
-        # which partitions need tombstones without opening a vector
-        touched = sorted(
-            r["f"]
-            for r in matched.select(
-                F.element_at(F.split("__file", "/"), -1).alias("f")
-            )
-            .distinct()
-            .collect()
-        )
-        changes = _write_changes(
-            wh,
-            database,
-            table,
-            matched.drop("__file").withColumn(
-                "_change_type", F.lit("delete")
-            ),
-        )
-    finally:
-        matched.unpersist()
-    n_deleted = (
-        wh.spark.read.parquet(
-            *[
-                f"{_snap_dir(wh, database, table)}/{rel}"
-                for rel in changes
-            ]
-        ).count()
-        if changes
-        else 0
-    )
-    next_v = _next_version(
-        wh, database, table, vs=[prev_m["version"]]
-    )
-    manifest = {
-        "version": next_v,
-        "retired": sorted(prev_m.get("retired", [])),
-        "schema": prev_m["schema"],
-        "changes": changes,
-        "dvs": list(prev_m.get("dvs", [])) + dv_files,
-        "dv_rows": int(prev_m.get("dv_rows", 0)) + n_deleted,
-        # file deltas (r14): a MoR delete moves no data files — other
-        # writers' rebase checks read this instead of falling back
-        # (their dv-state equality check still rejects rebasing PAST
-        # this commit, as it must: the mask changed)
-        "added": [],
-        "removed": [],
-    }
-    # file-scoped mask planning: only recordable when the carried
-    # vectors' coverage is known too — a legacy manifest with dvs but
-    # no dv_files keeps the (correct, conservative) mask-everything
-    # read until its vectors fold
-    if not prev_m.get("dvs") or "dv_files" in prev_m:
-        manifest["dv_files"] = sorted(
-            set(prev_m.get("dv_files", [])) | set(touched)
-        )
-    # identical file list -> share the previous entry (inline stats
-    # or shard references — shards are immutable)
-    for k in (
-        "files", "stats", "stat_cols", "bloom_cols", "shards",
-        "n_files", "bloom_sidecars",
-    ):
-        if k in prev_m:
-            manifest[k] = prev_m[k]
-    if summary:
-        manifest["summary"] = dict(summary)
-    if prev_m.get("constraints"):
-        manifest["constraints"] = prev_m["constraints"]
-    if prev_m.get("txns"):
-        manifest["txns"] = prev_m["txns"]
-    _put_manifest(wh, database, table, manifest)
-    return next_v, n_deleted
 
 
 def delete_where_mor(
@@ -4407,12 +3961,12 @@ def delete_where_mor(
     summary: dict | None = None,
 ) -> tuple[int, int]:
     """Row-level DELETE via merge-on-read deletion vectors — see
-    _delete_where_mor_once for semantics and the COW-vs-MoR cost
+    _dml for semantics and the COW-vs-MoR cost
     contract. Conflict-retries with full recompute (_retry_dml),
     same as the COW DML family."""
     return _retry_dml(
-        lambda: _delete_where_mor_once(
-            wh, database, table, predicate, summary=summary
+        lambda: _dml(
+            wh, database, table, predicate, "delete", "mor", summary
         ),
         lock_key=wh._path(database, table),
     )
@@ -4502,7 +4056,7 @@ def _apply_deletion_vectors_once(
         # precondition pins dv state unchanged): validate_added="ignore"
         next_v = _cow_commit(
             wh, database, table, prev, set(), [], [],
-            summary=summary, dvs_override=([], 0),
+            summary=summary, clear_dvs=True,
             validate_added="ignore",
         )
         return next_v, 0
@@ -4534,7 +4088,7 @@ def _apply_deletion_vectors_once(
         # conflict — same reasoning as the clear above)
         next_v = _cow_commit(
             wh, database, table, prev, set(), [], [],
-            summary=summary, dvs_override=([], 0),
+            summary=summary, clear_dvs=True,
             validate_added="ignore",
         )
         return next_v, 0
@@ -4547,7 +4101,7 @@ def _apply_deletion_vectors_once(
     rewritten = _cow_rewrite(wh, base, keep)
     next_v = _cow_commit(
         wh, database, table, prev, affected, rewritten, [],
-        summary=summary, dvs_override=([], 0),
+        summary=summary, clear_dvs=True,
         # content-preserving over ITS files; winner-added files are
         # never tombstoned (dv state pinned unchanged), so adds
         # cannot conflict with physically applying the vectors
@@ -4587,143 +4141,16 @@ def merge_upsert(
     summary: dict | None = None,
 ) -> tuple[int, int, int]:
     """MERGE (latest-wins upsert) via copy-on-write — see
-    _merge_upsert_once for semantics. Conflict-retries with full
+    _dml for semantics. Conflict-retries with full
     recompute (_retry_dml); latest-wins semantics are unchanged by
     a retry because the update set is re-applied against whatever
     state the winning commit left."""
     return _retry_dml(
-        lambda: _merge_upsert_once(
-            wh, database, table, updates, key_col, summary=summary
+        lambda: _dml(
+            wh, database, table, (updates, key_col), updates, "cow", summary
         ),
         lock_key=wh._path(database, table),
     )
-
-
-def _merge_upsert_mor_once(
-    wh: Warehouse,
-    database: str,
-    table: str,
-    updates: DataFrame,
-    key_col: str,
-    summary: dict | None = None,
-) -> tuple[int, int, int]:
-    """One optimistic attempt of merge_upsert_mor (wrapper below adds
-    conflict retry). MERGE via MERGE-ON-READ — completes the MoR DML
-    family (delete_where_mor r10, update_where_mor r11): matched rows
-    tombstone with a deletion vector, EVERY update row appends as new
-    data files, one commit — Iceberg's MoR MERGE shape (position
-    deletes + new data files). Cost O(matched rows + update rows),
-    never O(affected file bytes): upserting 100 dimension rows into a
-    table of GB-scale files writes a KB sidecar plus the update batch,
-    where the COW form rewrites every file containing a matched key.
-
-    Same visible semantics as merge_upsert (latest-wins replace on
-    ``key_col``, unmatched rows insert, try_cast column alignment,
-    identical CDC pairs — pytest pins COW == MoR row-for-row). The
-    appended rows keep the ``__row_id`` the updates carry — stamp ids
-    (ingest/ids.py) if the new rows must be MoR-addressable later.
-    Physical reclaim of the replaced copies is apply_deletion_vectors
-    / maintenance, same as every vector. Requires the __row_id stamp.
-    Returns (new_version, n_updated, n_inserted)."""
-    from pyspark.sql import functions as F
-
-    vs = versions(wh, database, table)
-    if not vs:
-        raise ValueError(
-            f"{database}.{table} is not snapshot-managed; "
-            "commit_snapshot first"
-        )
-    base = wh._path(database, table)
-    prev_m, schema, tagged = _read_current_tagged(wh, database, table)
-    if "__row_id" not in schema.names:
-        raise ValueError(
-            "merge-on-read merge needs the __row_id stamp "
-            f"({database}.{table} lacks it); use merge_upsert (COW)"
-        )
-    n_batch = updates.count()
-    if n_batch == 0:
-        return vs[-1], 0, 0
-    keys = updates.select(F.col(key_col)).distinct()
-    aligned_updates = updates.select(
-        *[
-            F.col(f.name).try_cast(f.dataType).alias(f.name)
-            if f.name in updates.columns
-            else F.lit(None).cast(f.dataType).alias(f.name)
-            for f in schema.fields
-        ]
-    )
-    matched = tagged.join(keys, key_col, "semi").persist()
-    try:
-        n_updated = matched.count()
-        dv_rel: list = []
-        touched: list = []
-        if n_updated:
-            dv_rel = _write_dv(
-                wh,
-                database,
-                table,
-                matched.select(
-                    F.element_at(
-                        F.split("__file", "/"), -1
-                    ).alias("file"),
-                    F.col("__row_id").alias("rid"),
-                ),
-            )
-            touched = sorted(
-                r["f"]
-                for r in matched.select(
-                    F.element_at(F.split("__file", "/"), -1).alias("f")
-                )
-                .distinct()
-                .collect()
-            )
-        n_inserted = updates.join(
-            matched.select(key_col).distinct(), key_col, "anti"
-        ).count()
-        changes = _write_changes(
-            wh,
-            database,
-            table,
-            matched.drop("__file")
-            .withColumn("_change_type", F.lit("delete"))
-            .unionByName(
-                aligned_updates.withColumn(
-                    "_change_type", F.lit("insert")
-                )
-            ),
-        )
-        # bound the appended batch's file count (~1M rows/file): a
-        # 3-row dimension upsert must not fan into one near-empty
-        # file per upstream partition
-        landed = _cow_rewrite(
-            wh, base,
-            aligned_updates.coalesce(max(1, -(-n_batch // 1_000_000))),
-            prefix="mormrg",
-        )
-    finally:
-        matched.unpersist()
-    dvf = None
-    if not prev_m.get("dvs") or "dv_files" in prev_m:
-        dvf = sorted(set(prev_m.get("dv_files", [])) | set(touched))
-    next_v = _cow_commit(
-        wh, database, table, prev_m, set(), landed, changes,
-        summary=summary,
-        # tombstoned files must stay live across a rebase (dv entries
-        # bind to (file, row)), same contract as update_where_mor
-        read_files=set(touched),
-        # serializable rebase (r14): same MERGE existence-dependence
-        # as the COW form — winner-added files must hold none of this
-        # merge's keys
-        validate_added=_added_scan_validator(
-            wh, base, schema, (keys, key_col)
-        ),
-        dvs_override=(
-            list(prev_m.get("dvs", [])) + dv_rel,
-            int(prev_m.get("dv_rows", 0)) + n_updated,
-            dvf,
-        ),
-    )
-    return next_v, n_updated, n_inserted
 
 
 def merge_upsert_mor(
@@ -4735,13 +4162,13 @@ def merge_upsert_mor(
     summary: dict | None = None,
 ) -> tuple[int, int, int]:
     """MERGE (latest-wins upsert) via merge-on-read deletion vectors +
-    appended update batch — see _merge_upsert_mor_once for semantics
+    appended update batch — see _dml for semantics
     and the O(matched + update rows) cost contract. Conflict-retries
     with full recompute (_retry_dml), same latest-wins reasoning as
     the COW form."""
     return _retry_dml(
-        lambda: _merge_upsert_mor_once(
-            wh, database, table, updates, key_col, summary=summary
+        lambda: _dml(
+            wh, database, table, (updates, key_col), updates, "mor", summary
         ),
         lock_key=wh._path(database, table),
     )
@@ -4880,8 +4307,8 @@ def compact_small_files(
     (_retry_dml + the per-table commit gate, r13): a cadence job used
     to surface its lost CAS to the caller and skip the tick, which
     under saturated DML meant compaction lost MOST races and the
-    small-file backlog grew (measured in mor_concurrent_churn_r13's
-    first runs — 6 of 7 cadences lost); retried through the gate it
+    small-file backlog grew (measured in the r13 concurrent MoR churn
+    rehearsal's first runs — 6 of 7 cadences lost); retried through the gate it
     lands like any other writer."""
     return _retry_dml(
         lambda: _compact_small_files_once(

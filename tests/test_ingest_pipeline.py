@@ -4109,6 +4109,304 @@ def test_mor_update_recomputes_when_same_row_raced(
     )
 
 
+def _mor_seed(spark, tmp_path):
+    from scratchdb_spark import snapshots as snap
+
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    snap.append_versioned(
+        wh, "db", "t",
+        spark.createDataFrame(
+            [(i, i % 5, i) for i in range(100)],
+            "__row_id long, grp long, val long",
+        ),
+    )
+    return wh
+
+
+def _count_dv_writes(snap, monkeypatch):
+    calls = []
+    orig = snap._write_dv
+    monkeypatch.setattr(
+        snap, "_write_dv",
+        lambda *a, **k: calls.append(1) or orig(*a, **k),
+    )
+    return calls
+
+
+def _rows(df, cols):
+    return sorted(tuple(r) for r in df.select(*cols).collect())
+
+
+def test_mor_delete_rebases_over_disjoint_mor_delete(
+    spark, tmp_path, monkeypatch
+):
+    """A MoR DELETE that loses the CAS to a concurrent MoR DELETE of
+    disjoint rows rebases like a MoR UPDATE does: its tombstones are
+    re-assembled onto the winner's grown vector set, with no second
+    tombstone write, and the landed state holds both deletes."""
+    from pyspark.sql import functions as F
+
+    from scratchdb_spark import snapshots as snap
+
+    wh = _mor_seed(spark, tmp_path)
+    state = _race_once_with(
+        snap, monkeypatch,
+        lambda: snap.delete_where_mor(wh, "db", "t", F.col("grp") == 4),
+    )
+    dv_writes = _count_dv_writes(snap, monkeypatch)
+    v, n = snap.delete_where_mor(wh, "db", "t", F.col("grp") == 2)
+    assert state["raced"] == 1 and n == 20
+    # the loser's first attempt + the winner's; a recompute makes 3
+    assert dv_writes == [1, 1]
+    m = snap._manifest(wh, "db", "t", v)
+    assert m["summary"]["rebased_from"] == 1
+    assert m["summary"]["rebased_onto"] == 2
+    assert m["dv_rows"] == 40
+    live = snap.read_snapshot(wh, "db", "t")
+    assert _rows(live, ["__row_id", "grp", "val"]) == [
+        (i, i % 5, i) for i in range(100) if i % 5 not in (2, 4)
+    ]
+    ch = snap.read_changes(wh, "db", "t", 2, v)
+    assert _rows(ch, ["_change_type", "__row_id", "val"]) == [
+        ("delete", i, i) for i in range(2, 100, 5)
+    ]
+
+
+def test_mor_merge_rebases_over_disjoint_mor_update(
+    spark, tmp_path, monkeypatch
+):
+    """A MoR MERGE that loses the CAS to a concurrent MoR UPDATE of
+    rows it does not match rebases: the winner's postimage files hold
+    none of the merge's keys and the two tombstone sets are disjoint,
+    so the first attempt's files re-commit onto the winner."""
+    from pyspark.sql import functions as F
+
+    from scratchdb_spark import snapshots as snap
+
+    wh = _mor_seed(spark, tmp_path)
+    state = _race_once_with(
+        snap, monkeypatch,
+        lambda: snap.update_where_mor(
+            wh, "db", "t", F.col("__row_id") >= 50,
+            {"val": F.col("val") + 1000},
+        ),
+    )
+    dv_writes = _count_dv_writes(snap, monkeypatch)
+    ups = spark.createDataFrame(
+        [(k, 7, -k) for k in list(range(10, 20)) + list(range(500, 505))],
+        "__row_id long, grp long, val long",
+    )
+    v, n_up, n_ins = snap.merge_upsert_mor(wh, "db", "t", ups, "__row_id")
+    assert state["raced"] == 1 and (n_up, n_ins) == (10, 5)
+    assert dv_writes == [1, 1]
+    m = snap._manifest(wh, "db", "t", v)
+    assert m["summary"]["rebased_from"] == 1
+    assert m["summary"]["rebased_onto"] == 2
+    assert m["dv_rows"] == 60
+    want = sorted(
+        [(i, i % 5, i) for i in range(10)]
+        + [(k, 7, -k) for k in list(range(10, 20)) + list(range(500, 505))]
+        + [(i, i % 5, i) for i in range(20, 50)]
+        + [(i, i % 5, i + 1000) for i in range(50, 100)]
+    )
+    live = snap.read_snapshot(wh, "db", "t")
+    assert _rows(live, ["__row_id", "grp", "val"]) == want
+
+
+def test_mor_merge_recomputes_when_same_row_raced(
+    spark, tmp_path, monkeypatch
+):
+    """The serializable complement: the concurrent MoR UPDATE touched
+    rows the merge also matches, so the rebase refuses and the merge
+    recomputes against the winner's postimage — latest-wins per key,
+    and no rebase provenance on the landed manifest."""
+    from pyspark.sql import functions as F
+
+    from scratchdb_spark import snapshots as snap
+
+    wh = _mor_seed(spark, tmp_path)
+    state = _race_once_with(
+        snap, monkeypatch,
+        lambda: snap.update_where_mor(
+            wh, "db", "t", F.col("__row_id") < 50,
+            {"val": F.col("val") + 1000},
+        ),
+    )
+    ups = spark.createDataFrame(
+        [(k, 7, -k) for k in list(range(10, 20)) + list(range(500, 505))],
+        "__row_id long, grp long, val long",
+    )
+    v, n_up, n_ins = snap.merge_upsert_mor(wh, "db", "t", ups, "__row_id")
+    assert state["raced"] == 1 and (n_up, n_ins) == (10, 5)
+    assert "rebased_from" not in snap._manifest(
+        wh, "db", "t", v
+    ).get("summary", {})
+    want = sorted(
+        [(i, i % 5, i + 1000) for i in range(10)]
+        + [(k, 7, -k) for k in list(range(10, 20)) + list(range(500, 505))]
+        + [(i, i % 5, i + 1000) for i in range(20, 50)]
+        + [(i, i % 5, i) for i in range(50, 100)]
+    )
+    live = snap.read_snapshot(wh, "db", "t")
+    assert _rows(live, ["__row_id", "grp", "val"]) == want
+
+
+def test_mor_concurrent_churn_converges(spark, tmp_path):
+    """Three writer threads, each on its own key range, run MoR
+    updates, merges and deletes plus plain appends, while a fourth
+    thread compacts with auto_fold_dvs. Every op lands inside the
+    retry budget; the final table equals each thread's sequential
+    replay; the net read_changes feed equals the snapshot diff; the
+    manifest's dv_rows equals the tombstones on disk; and applying
+    the vectors afterwards keeps the visible rows and clears them."""
+    import threading
+
+    from pyspark.sql import functions as F
+
+    from scratchdb_spark import snapshots as snap
+
+    n_threads, span, cycles = 3, 100, 2
+    cols = ["__row_id", "grp", "payload"]
+    schema = "__row_id long, grp long, payload string"
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    base_rows = [
+        (i, i % 7, f"b{i}") for i in range(n_threads * span)
+    ]
+    snap.append_versioned(
+        wh, "db", "t",
+        spark.createDataFrame(
+            spark.sparkContext.parallelize(base_rows, 12), schema
+        ),
+    )
+    v0 = snap.versions(wh, "db", "t")[-1]
+
+    def ops(t):
+        """Thread t's ops, in order, as (kind, arg) pairs."""
+        lo = t * span
+        out = []
+        for i in range(cycles):
+            fresh = [
+                (10_000 + t * 1000 + i * 10 + j, 1, f"a{t}_{i}")
+                for j in range(5)
+            ]
+            upd = (lo + i * 10, lo + i * 10 + 10, f"u{t}_{i}")
+            mrg = [
+                (k, 2, f"m{t}_{i}")
+                for k in range(lo + 40 + i * 5, lo + 45 + i * 5)
+            ] + [
+                (20_000 + t * 1000 + i * 10 + j, 3, f"n{t}_{i}")
+                for j in range(3)
+            ]
+            # a key range plus two of this cycle's appended rows
+            dele = (
+                lo + 60 + i * 5, lo + 65 + i * 5, fresh[0][0], fresh[1][0]
+            )
+            out += [
+                ("append", fresh),
+                ("update", upd),
+                ("merge", mrg),
+                ("delete", dele),
+            ]
+        return out
+
+    errors: list = []
+    done = threading.Event()
+
+    def writer(t):
+        for kind, arg in ops(t):
+            try:
+                if kind == "append":
+                    snap.append_versioned(
+                        wh, "db", "t", spark.createDataFrame(arg, schema)
+                    )
+                elif kind == "update":
+                    a, b, p = arg
+                    snap.update_where_mor(
+                        wh, "db", "t",
+                        f"__row_id >= {a} AND __row_id < {b}",
+                        {"payload": F.lit(p)},
+                    )
+                elif kind == "merge":
+                    snap.merge_upsert_mor(
+                        wh, "db", "t",
+                        spark.createDataFrame(arg, schema), "__row_id",
+                    )
+                else:
+                    a, b, x, y = arg
+                    snap.delete_where_mor(
+                        wh, "db", "t",
+                        f"(__row_id >= {a} AND __row_id < {b}) "
+                        f"OR __row_id IN ({x}, {y})",
+                    )
+            except Exception as e:  # noqa: BLE001
+                errors.append(f"t{t} {kind}: {type(e).__name__}: {e}")
+
+    def compactor():
+        while not done.wait(1.5):
+            try:
+                snap.compact_small_files(
+                    wh, "db", "t",
+                    small_file_bytes=1024 * 1024 * 1024,
+                    auto_fold_dvs=True,
+                )
+            except snap.CommitConflictError:
+                pass  # a cadence job: a lost CAS re-runs next tick
+            except Exception as e:  # noqa: BLE001
+                errors.append(f"compact: {type(e).__name__}: {e}")
+
+    threads = [
+        threading.Thread(target=writer, args=(t,))
+        for t in range(n_threads)
+    ]
+    comp = threading.Thread(target=compactor)
+    comp.start()
+    for th in threads:
+        th.start()
+    for th in threads:
+        th.join(timeout=600)
+    done.set()
+    comp.join(timeout=600)
+    assert not any(th.is_alive() for th in [*threads, comp])
+    assert errors == []
+
+    # sequential replay per thread: ranges never cross threads, and
+    # compaction never changes rows, so interleaving must not matter
+    want = {r[0]: r for r in base_rows}
+    for t in range(n_threads):
+        for kind, arg in ops(t):
+            if kind in ("append", "merge"):
+                want.update({r[0]: r for r in arg})
+            elif kind == "update":
+                a, b, p = arg
+                for k in range(a, b):
+                    if k in want:
+                        want[k] = (k, want[k][1], p)
+            else:
+                a, b, x, y = arg
+                for k in [*range(a, b), x, y]:
+                    want.pop(k, None)
+    cur = snap.read_snapshot(wh, "db", "t")
+    assert _rows(cur, cols) == sorted(want.values())
+
+    # net CDC across the whole concurrent span == the snapshot diff
+    old = snap.read_snapshot(wh, "db", "t", version=v0)
+    ch = snap.read_changes(wh, "db", "t", v0)
+    for ct, a, b in (("insert", cur, old), ("delete", old, cur)):
+        assert _rows(
+            ch.filter(F.col("_change_type") == ct), cols
+        ) == _rows(a.select(cols).exceptAll(b.select(cols)), cols)
+
+    # vector bookkeeping matches the tombstones on disk
+    m = snap._manifest(wh, "db", "t", snap.versions(wh, "db", "t")[-1])
+    dvf = snap._dv_frame(wh, "db", "t", m.get("dvs", []))
+    assert m.get("dv_rows", 0) == (dvf.count() if dvf is not None else 0)
+
+    before = _rows(cur, cols)
+    v_apply, _nf = snap.apply_deletion_vectors(wh, "db", "t")
+    assert _rows(snap.read_snapshot(wh, "db", "t"), cols) == before
+    assert not snap._manifest(wh, "db", "t", v_apply).get("dvs")
+
+
 def test_dml_locks_self_evict(spark, tmp_path):
     """r14 advisory: the per-table commit-gate registry must not
     retain entries for the lifetime of the driver — after every DML

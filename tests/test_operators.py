@@ -4455,8 +4455,12 @@ def _dv_table(spark, tmp_path, n=100, name="t"):
     from scratchdb_spark.tables import Warehouse
 
     wh = Warehouse(spark, str(tmp_path / "wh"))
+    # an explicit slice count fixes the file layout (32 files) on any
+    # host; the default follows the core count
     df = spark.createDataFrame(
-        [(i, f"u{i}", i % 5) for i in range(n)],
+        spark.sparkContext.parallelize(
+            [(i, f"u{i}", i % 5) for i in range(n)], 32
+        ),
         "__row_id long, name string, grp long",
     )
     snap.append_versioned(wh, "db", name, df)
@@ -5379,6 +5383,54 @@ def test_merge_upsert_mor_matches_cow_and_defers_rewrite(
     cur = snap.read_snapshot(wh_mor, "db", "t")
     assert cur.filter("__row_id = 10").count() == 1
     assert cur.filter("name = 'ghost'").count() == 1
+
+
+@pytest.mark.parametrize("op", ["delete", "update", "merge"])
+def test_cow_mor_parity_exact_rows(spark, tmp_path, op):
+    """The COW and MoR forms of each DML, run on twin tables, leave
+    the same visible rows and the same change rows — every
+    ``_change_type`` and data column, not just the counts."""
+    from pyspark.sql import functions as F
+
+    cols = ["__row_id", "name", "grp"]
+    upd = [(3, "updated3", 99), (1000, "fresh", 7), (8, "updated8", 99)]
+    out = {}
+    for mode in ("cow", "mor"):
+        wh, snap = _dv_table(spark, tmp_path / mode)
+        sfx = "" if mode == "cow" else "_mor"
+        if op == "delete":
+            res = getattr(snap, "delete_where" + sfx)(
+                wh, "db", "t", "grp = 3 OR __row_id = 1"
+            )
+        elif op == "update":
+            res = getattr(snap, "update_where" + sfx)(
+                wh, "db", "t", "grp = 3",
+                {"name": F.concat(F.col("name"), F.lit("!")),
+                 "grp": "grp + 10"},
+            )
+        else:
+            res = getattr(snap, "merge_upsert" + sfx)(
+                wh, "db", "t",
+                spark.createDataFrame(
+                    upd, "__row_id long, name string, grp long"
+                ),
+                "__row_id",
+            )
+        ch = snap.read_changes(wh, "db", "t", 1, res[0])
+        out[mode] = (
+            res[1:],
+            sorted(
+                map(tuple, snap.read_snapshot(wh, "db", "t")
+                    .select(cols).collect())
+            ),
+            sorted(
+                map(tuple, ch.select("_change_type", *cols).collect())
+            ),
+        )
+    assert out["cow"] == out["mor"]
+    counts, _live, changes = out["cow"]
+    n_del = sum(1 for c in changes if c[0] == "delete")
+    assert n_del == counts[0] > 0
 
 
 def test_dedup_index_above_cap_probe_exact_pairs(spark, tmp_path):
