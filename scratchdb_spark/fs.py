@@ -22,37 +22,8 @@ where the store's LIST API paging dominates py4j overhead anyway.
 from __future__ import annotations
 
 import os as _os
-import time as _time
 
 from pyspark.sql import SparkSession
-
-#: Rehearsal knob (r10): per-metadata-operation injected latency in
-#: seconds, modeling an object store's per-request round trip (~50 ms
-#: S3 GET/PUT/HEAD) on the local FS. Applied at the top of every
-#: DRIVER-side metadata op in this module (list/read/write/exists/
-#: rename/delete), so a rehearsal measures how many SERIALIZED
-#: metadata round trips a code path costs — pooled/threaded calls
-#: overlap their sleeps exactly as concurrent GETs overlap. Executor-
-#: side data-file IO (parquet scan/write, the pyarrow stats kernel)
-#: does NOT pass through here; its object-store behavior is
-#: extrapolated as files-per-task x latency in PERF.md. Set via
-#: ``fs.SIM_LATENCY_S = 0.05`` or SCRATCHDB_SIM_FS_LATENCY_MS in the
-#: environment; production paths leave it 0.0 (one float compare).
-SIM_LATENCY_S = (
-    float(_os.environ.get("SCRATCHDB_SIM_FS_LATENCY_MS", "0")) / 1000.0
-)
-
-#: Running count of latency-charged metadata ops (rehearsal
-#: observability: ops x latency = the serial lower bound to compare
-#: a measured wall against).
-SIM_OP_COUNT = 0
-
-
-def _maybe_delay() -> None:
-    global SIM_OP_COUNT
-    if SIM_LATENCY_S > 0:
-        SIM_OP_COUNT += 1
-        _time.sleep(SIM_LATENCY_S)
 
 
 def _local_path(path) -> str | None:
@@ -76,19 +47,16 @@ def _jfs(spark: SparkSession, path: str):
 
 
 def exists(spark: SparkSession, path: str) -> bool:
-    _maybe_delay()
     fs, hpath, _ = _jfs(spark, path)
     return bool(fs.exists(hpath))
 
 
 def is_dir(spark: SparkSession, path: str) -> bool:
-    _maybe_delay()
     fs, hpath, _ = _jfs(spark, path)
     return bool(fs.exists(hpath) and fs.getFileStatus(hpath).isDirectory())
 
 
 def mkdirs(spark: SparkSession, path: str) -> None:
-    _maybe_delay()
     fs, hpath, _ = _jfs(spark, path)
     fs.mkdirs(hpath)
 
@@ -101,7 +69,6 @@ def list_names(
     of py4j per entry, which commit latency cannot afford at 100k
     files); the two paths return identical results, pinned by
     test_fs_list_names_local_fast_path_matches_jvm."""
-    _maybe_delay()
     lp = _local_path(path)
     if lp is not None:
         try:
@@ -140,7 +107,6 @@ def mtime(spark: SparkSession, path: str) -> int:
     path doesn't exist). Used by maintenance reclamation to give
     not-yet-referenced metadata written by in-flight commits a grace
     window before being treated as debris."""
-    _maybe_delay()
     fs, hpath, _ = _jfs(spark, path)
     if not fs.exists(hpath):
         return 0
@@ -148,7 +114,6 @@ def mtime(spark: SparkSession, path: str) -> int:
 
 
 def delete(spark: SparkSession, path: str, recursive: bool = True) -> bool:
-    _maybe_delay()
     fs, hpath, _ = _jfs(spark, path)
     return bool(fs.delete(hpath, recursive))
 
@@ -157,14 +122,12 @@ def rename(spark: SparkSession, src: str, dst: str) -> bool:
     """FileSystem.rename — atomic within one HDFS/file namespace (on
     object stores it's a copy+delete; callers that need atomic
     visibility gate on a manifest PUT instead, see snapshots.py)."""
-    _maybe_delay()
     fs, spath, jvm = _jfs(spark, src)
     return bool(fs.rename(spath, jvm.org.apache.hadoop.fs.Path(dst)))
 
 
 def write_text(spark: SparkSession, path: str, text: str) -> None:
     """Create-or-overwrite a small text file (sidecar metadata)."""
-    _maybe_delay()
     fs, hpath, _ = _jfs(spark, path)
     out = fs.create(hpath, True)
     try:
@@ -189,7 +152,6 @@ def put_text_atomic(
     check narrows the race to the rename itself. Object stores
     without atomic rename/conditional PUT need a coordination layer
     above this — the same boundary Delta/Iceberg document."""
-    _maybe_delay()
     import uuid as _uuid
 
     fs, hpath, jvm = _jfs(spark, path)
@@ -272,7 +234,6 @@ def create_text(spark: SparkSession, path: str, text: str) -> bool:
 
 
 def read_text(spark: SparkSession, path: str) -> str:
-    _maybe_delay()
     fs, hpath, jvm = _jfs(spark, path)
     stream = fs.open(hpath)
     try:
@@ -285,7 +246,6 @@ def move_from_local(spark: SparkSession, local: str, remote: str) -> None:
     """Upload a node-local file to ``remote`` and remove the local copy —
     the rotate-then-upload step of the reference's filesystem datasink
     (filesystem.go:95-171: local NDJSON -> blob store)."""
-    _maybe_delay()
     fs, rpath, jvm = _jfs(spark, remote)
     parent = rpath.getParent()
     if parent is not None:

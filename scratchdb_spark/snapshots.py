@@ -229,18 +229,19 @@ def _put_manifest(
     """Manifest PUT + watermark update (the PUT is the atomic commit
     point; the watermark write after it only ever raises the floor).
 
-    The PUT is create-if-absent (optimistic concurrency): two writers
-    racing to the same version number cannot silently last-write-win —
-    the loser gets CommitConflictError. commit_snapshot retries with a
-    fresh version (its manifest is recomputed from the directory, so
-    the retry adopts the winner's files too); DML (every _dml form,
-    overwrite_versioned, compaction, apply_deletion_vectors) commits
-    only through _cow_commit — its manifest is derived from a
-    specific parent version, so a loser either rebases onto a
-    provably disjoint winner or retries via _retry_dml with a FULL
-    recompute against the fresh snapshot. ``overwrite``
-    is reserved for same-version metadata rewrites that are not
-    commits (maintain_table's retired-set drain)."""
+    Every manifest that creates a version comes from _build_manifest,
+    which derives its file deltas, retired set and carried config from
+    the parent it is numbered against. The PUT is create-if-absent
+    (optimistic concurrency): two writers racing to the same version
+    number cannot silently last-write-win — the loser gets
+    CommitConflictError. What the loser does next is its commit path's
+    business: _commit_loop (commit_snapshot, txn appends) re-reads and
+    rebuilds against the fresh snapshot; _cow_commit (every DML,
+    overwrite, compaction, apply_deletion_vectors) rebases onto a
+    provably disjoint winner or raises to _retry_dml's full recompute;
+    rollback_table and maintain_table raise. ``overwrite`` is reserved
+    for same-version metadata rewrites that are not commits
+    (maintain_table's retired-set drain)."""
     v = manifest["version"]
     # commit wall-clock for timestamp time travel (read_snapshot
     # as_of_timestamp; informational — version numbers remain the
@@ -1141,10 +1142,12 @@ def _assemble_manifest_entry(
     blooms: list[str] = (),
 ) -> dict:
     """The files/stats portion of a new manifest for ``files``:
-    inline below _SHARD_THRESHOLD, sharded above. ``added`` are names
-    new since ``prev`` (their stats, if any, are in ``fresh_stats``);
-    ``removed`` are prev names no longer live — the set that decides
-    which prev shards must rewrite. Kept shards carry their files AND
+    inline below _SHARD_THRESHOLD, sharded above. ``prev`` is the
+    stats/shard base (not necessarily the commit's parent, see
+    _build_manifest); ``added`` are names new since ``prev`` (their
+    stats, if any, are in ``fresh_stats``); ``removed`` are prev names
+    no longer live — the set that decides which prev shards must
+    rewrite. Kept shards carry their files AND
     stats by reference; only shards touched by removals are opened,
     so commit metadata cost is O(churn) in stats and shard IO.
     Oversized filter bitmaps in ``fresh_stats`` (token blooms at
@@ -1174,15 +1177,7 @@ def _assemble_manifest_entry(
     ):
         # inline (small table, or a sharded table that shrank well
         # below the threshold — hysteresis avoids flapping)
-        entry: dict = {
-            "files": files,
-            # per-commit file deltas (r14): O(churn) lists that let a
-            # CAS-losing COW commit decide REBASE vs recompute by
-            # reading only the intervening manifest JSONs — never
-            # opening shards (see _rebase_parent)
-            "added": sorted(set(added) & file_set),
-            "removed": sorted(removed),
-        }
+        entry: dict = {"files": files}
         if cols or blooms:
             carried = (
                 _manifest_stats(
@@ -1265,10 +1260,6 @@ def _assemble_manifest_entry(
     entry = {
         "shards": sorted(shards, key=lambda r: r["first"]),
         "n_files": len(files),
-        # per-commit file deltas (r14) — same contract as the inline
-        # path: conflict-detection metadata for _rebase_parent, O(churn)
-        "added": sorted(set(added) & file_set),
-        "removed": sorted(removed),
     }
     if cols:
         entry["stat_cols"] = cols
@@ -1277,6 +1268,147 @@ def _assemble_manifest_entry(
     if sidecars:
         entry["bloom_sidecars"] = sidecars
     return entry
+
+
+#: stats_base default of _build_manifest: the commit's own parent
+_PARENT = object()
+#: the manifest keys that hold deletion-vector state
+_DV_KEYS = ("dvs", "dv_rows", "dv_files")
+
+
+def _dv_state(m: dict) -> dict:
+    """A manifest's deletion-vector keys ({} when it has no vectors)."""
+    return {k: m[k] for k in _DV_KEYS if k in m} if m.get("dvs") else {}
+
+
+def _stat_config(
+    parent: dict | None, stat_cols=None, bloom_cols=None
+) -> tuple[list, list]:
+    """(stat columns, bloom columns) of a commit: the op's own lists,
+    else the parent's — once a table collects zone maps or blooms,
+    every commit keeps them current."""
+    p = parent or {}
+    return (
+        list(stat_cols if stat_cols is not None else p.get("stat_cols", [])),
+        list(
+            bloom_cols if bloom_cols is not None else p.get("bloom_cols", [])
+        ),
+    )
+
+
+def _build_manifest(
+    wh: Warehouse,
+    database: str,
+    table: str,
+    version: int,
+    parent: dict | None,
+    parent_files,
+    files,
+    fresh: dict,
+    schema: str | None = None,
+    changes: list[str] | None = None,
+    summary: dict | None = None,
+    stat_cols: list[str] | None = None,
+    bloom_cols: list[str] | None = None,
+    constraints: dict | None = None,
+    txn: tuple[str, int] | None = None,
+    dvs: dict | tuple | None = None,
+    stats_base=_PARENT,
+    listing: set | None = None,
+) -> dict:
+    """The one builder of a new version's manifest; every commit path
+    PUTs what it returns. ``parent`` is the manifest the version is
+    numbered against and ``parent_files`` its live file list;
+    ``files`` is the new live list and ``fresh`` the stats computed
+    for it (files missing from ``fresh`` carry their stats).
+
+    Derived here, so no commit path can state them differently:
+
+    - ``added``/``removed``: the file deltas relative to ``parent``
+      (r14) — O(churn) lists that let a CAS-losing COW commit decide
+      REBASE vs recompute from the intervening manifest JSONs alone
+      (_rebase_parent);
+    - ``retired``: (parent's retired ∪ parent's files) − ``files`` —
+      files that left the live set stay on disk for older versions,
+      and commit_snapshot must never re-adopt them. ``listing`` (a
+      directory listing) prunes names whose files are physically gone,
+      so the set stays bounded by the dead files still on disk;
+    - config carried from the parent unless the op sets it:
+      ``schema``, ``stat_cols``/``bloom_cols``, ``constraints`` ({}
+      clears), the per-app ``txns`` watermarks (``txn`` advances one)
+      and the deletion vectors. ``dvs`` None carries the parent's —
+      safe because every rewrite reads through the mask, so carried
+      entries are live or dead, never wrong, and ``dv_files`` only
+      needs to stay a superset of the live tombstoned files; a dict is
+      the exact dv state to record ({} clears, rollback restores its
+      target's); a tuple ``(entries, rows, files)`` GROWS the parent's
+      vectors by the op's own delta (MoR DML).
+
+    ``stats_base`` is the manifest the files/stats entry is derived
+    from (_assemble_manifest_entry): the parent by default, None to
+    re-shard every file from ``fresh`` (maintenance), or a manifest
+    whose file list IS ``files``, whose entry is then shared
+    (rollback's target)."""
+    files = sorted(files)
+    file_set = set(files)
+    parent_set = set(parent_files)
+    added = [f for f in files if f not in parent_set]
+    removed = parent_set - file_set
+    if stats_base is _PARENT:
+        stats_base, base_added, base_removed = parent, added, removed
+    else:
+        base_added = files if stats_base is None else []
+        base_removed = set()
+    parent = parent or {}
+    retired = (set(parent.get("retired", [])) | parent_set) - file_set
+    if listing is not None:
+        retired &= listing
+    cols, blooms = _stat_config(parent, stat_cols, bloom_cols)
+    manifest = {
+        "version": version,
+        "retired": sorted(retired),
+        "schema": schema if schema is not None else parent["schema"],
+        **_assemble_manifest_entry(
+            wh, database, table, stats_base, files, base_added,
+            base_removed, fresh, cols, blooms,
+        ),
+        "added": added,
+        "removed": sorted(removed),
+    }
+    if changes is not None:
+        manifest["changes"] = changes
+    if summary:
+        # commit provenance (Iceberg snapshot-summary's public design):
+        # small operation metadata surfaced by history()
+        manifest["summary"] = dict(summary)
+    cons = constraints if constraints is not None else parent.get(
+        "constraints", {}
+    )
+    if cons:
+        manifest["constraints"] = dict(cons)
+    txns = dict(parent.get("txns", {}))
+    if txn is not None:
+        txns[txn[0]] = txn[1]
+    if txns:
+        manifest["txns"] = txns
+    if isinstance(dvs, tuple):
+        entries, rows, dv_files = dvs
+        dvs = {}
+        if parent.get("dvs") or entries:
+            dvs = {
+                "dvs": list(parent.get("dvs", [])) + list(entries),
+                "dv_rows": int(parent.get("dv_rows", 0)) + int(rows),
+            }
+            # file-scoped mask coverage stays recordable only when the
+            # parent's own coverage is known
+            if (
+                not parent.get("dvs") or "dv_files" in parent
+            ) and dv_files is not None:
+                dvs["dv_files"] = sorted(
+                    set(parent.get("dv_files", [])) | set(dv_files)
+                )
+    manifest.update(_dv_state(parent) if dvs is None else dvs)
+    return manifest
 
 
 def _write_changes(
@@ -1423,7 +1555,8 @@ def _tagged_rows(
 
 def _aligned(batch: DataFrame, schema) -> DataFrame:
     """``batch`` in the table's column order and types: try_cast per
-    column, missing columns NULL (the MERGE/OVERWRITE alignment)."""
+    column, missing columns NULL (the MERGE, OVERWRITE and
+    staged-append alignment)."""
     from pyspark.sql import functions as F
 
     return batch.select(
@@ -1436,6 +1569,93 @@ def _aligned(batch: DataFrame, schema) -> DataFrame:
             for f in schema.fields
         ]
     )
+
+
+def _commit_loop(
+    wh: Warehouse,
+    database: str,
+    table: str,
+    live,
+    stat_cols: list[str] | None = None,
+    bloom_cols: list[str] | None = None,
+    **meta,
+) -> int:
+    """The CAS-retry loop of the commits that record a file list
+    without replacing data (commit_snapshot, _txn_commit). Each
+    attempt re-lists the versions, numbers the commit from THAT
+    listing (_next_version's OCC requirement), reads the parent and
+    asks ``live(parent, parent_files)`` for (new file list, directory
+    listing or None); stats are computed for the files whose stats
+    are not carried, and the _build_manifest result is PUT. A lost
+    CAS retries against the fresh snapshot — concurrent commits
+    linearize instead of losing one. ``meta`` goes to _build_manifest.
+    Returns the committed version."""
+    last_err: CommitConflictError | None = None
+    for _attempt in range(_CAS_ATTEMPTS):
+        if _attempt:
+            _cas_backoff(_attempt)
+        vs = versions(wh, database, table)
+        try:
+            next_v = _next_version(wh, database, table, vs=vs)
+        except CommitConflictError as e:
+            last_err = e  # racer landed since our listing: re-read
+            continue
+        prev = _manifest(wh, database, table, vs[-1]) if vs else None
+        prev_files = (
+            _manifest_files(wh, database, table, prev) if prev else []
+        )
+        files, listing = live(prev, prev_files)
+        prev_set = set(prev_files)
+        schema = wh.schema(database, table)
+        cols, blooms = _stat_config(prev, stat_cols, bloom_cols)
+        # stats are computed ONLY for files whose stats aren't carried
+        # from the previous manifest/shards — normally just the new
+        # batch, so stats cost is O(churn); a commit that widens the
+        # stat columns backfills every file lacking them
+        fresh = {}
+        if cols or blooms:
+            if (
+                prev
+                and "shards" in prev
+                and set(prev.get("stat_cols", [])) >= set(cols)
+                and set(prev.get("bloom_cols", [])) >= set(blooms)
+            ):
+                # sharded prev with covering stat columns: carried
+                # stats STAY in their shards (never materialized on
+                # the driver) — the every-commit-keeps-stats-current
+                # invariant guarantees coverage; fresh = the new files
+                carried_ok = prev_set
+            else:
+                carried = (
+                    _manifest_stats(
+                        wh, database, table, prev,
+                        [f for f in files if f in prev_set],
+                    )
+                    if prev
+                    else {}
+                )
+                carried_ok = {
+                    f
+                    for f, rec in carried.items()
+                    if set(rec) >= set(cols)
+                    and all(f"{b}__bloom" in rec for b in blooms)
+                }
+            fresh = _file_stats(
+                wh, wh._path(database, table),
+                [f for f in files if f not in carried_ok], schema, cols,
+                blooms,
+            )
+        manifest = _build_manifest(
+            wh, database, table, next_v, prev, prev_files, files, fresh,
+            schema=schema.json(), stat_cols=cols, bloom_cols=blooms,
+            listing=listing, **meta,
+        )
+        try:
+            _put_manifest(wh, database, table, manifest)
+            return next_v
+        except CommitConflictError as e:
+            last_err = e
+    raise last_err  # type: ignore[misc]  # _CAS_ATTEMPTS consecutive conflicts
 
 
 def commit_snapshot(
@@ -1454,17 +1674,10 @@ def commit_snapshot(
     concurrent commit to the same number loses the CAS and RETRIES
     with a recomputed manifest (which, being a fresh directory
     listing, includes the winner's files — concurrent appends
-    linearize instead of losing one batch)."""
-    last_err: CommitConflictError | None = None
-    for _attempt in range(_CAS_ATTEMPTS):
-        if _attempt:
-            _cas_backoff(_attempt)
-        vs = versions(wh, database, table)
-        try:
-            next_v = _next_version(wh, database, table, vs=vs)
-        except CommitConflictError as e:
-            last_err = e  # racer landed since our listing: re-read
-            continue
+    linearize instead of losing one). ``stat_cols``/``bloom_cols``
+    None inherit the table's existing stat columns."""
+
+    def live(prev, prev_files):
         # Copy-on-write DELETE/MERGE leave their replaced files on disk
         # (older versions still reference them — that's the audit
         # trail), recording them in the manifest's cumulative "retired"
@@ -1472,24 +1685,9 @@ def commit_snapshot(
         # retired set, or the first append after a takedown would
         # RESURRECT the deleted rows in the new snapshot (caught by the
         # read_changes CDC test).
-        retired: set = set()
-        if vs:
-            prev = json.loads(
-                hfs.read_text(
-                    wh.spark,
-                    f"{_snap_dir(wh, database, table)}/v{vs[-1]:012d}.json",
-                )
-            )
-            retired = set(prev.get("retired", []))
         disk = _data_files(wh, database, table)
-        # prune retired names whose files are physically gone
-        # (maintenance deletes them) so the set stays bounded by live
-        # dead files, and never grows for the lifetime of the table
-        retired &= set(disk)
-        schema = wh.schema(database, table)
-        prev_files = (
-            set(_manifest_files(wh, database, table, prev)) if vs else set()
-        )
+        retired = set(prev.get("retired", [])) if prev else set()
+        prev_set = set(prev_files)
         # adoption guard (new r8, caught live by the DML-retry race
         # test): COW rewrites rename their survivor files into the
         # table dir BEFORE their own manifest PUT — if a concurrent
@@ -1499,99 +1697,18 @@ def commit_snapshot(
         # listing-derived manifest by CARRY-OVER from the previous
         # manifest (i.e. once its own commit won); uncommitted ones
         # stay invisible debris until maintenance reclaims them.
-        files = sorted(
+        files = [
             f
             for f in disk
             if f not in retired
-            and (f in prev_files or not f.startswith(_COW_PREFIXES))
-        )
-        added = [f for f in files if f not in prev_files]
-        removed = prev_files - set(files)
-        # file statistics: stat_cols=None inherits the table's existing
-        # stat columns (once a table collects zone maps, every commit
-        # keeps them current); stats are computed ONLY for files whose
-        # stats aren't carried from the previous manifest/shards —
-        # normally just the appended batch, so stats cost is O(churn)
-        cols = (
-            list(stat_cols)
-            if stat_cols is not None
-            else (prev.get("stat_cols", []) if vs else [])
-        )
-        blooms = (
-            list(bloom_cols)
-            if bloom_cols is not None
-            else (prev.get("bloom_cols", []) if vs else [])
-        )
-        fresh = {}
-        if cols or blooms:
-            if (
-                vs
-                and "shards" in prev
-                and set(prev.get("stat_cols", [])) >= set(cols)
-                and set(prev.get("bloom_cols", [])) >= set(blooms)
-            ):
-                # sharded prev with covering stat columns: carried
-                # stats STAY in their shards (never materialized on
-                # the driver) — the every-commit-keeps-stats-current
-                # invariant guarantees coverage; fresh = the new batch
-                fresh_names = added
-            elif vs:
-                carried_ok = {
-                    f
-                    for f, rec in _manifest_stats(
-                        wh, database, table, prev,
-                        [f for f in files if f in prev_files],
-                    ).items()
-                    if set(rec) >= set(cols)
-                    and all(f"{b}__bloom" in rec for b in blooms)
-                }
-                fresh_names = [f for f in files if f not in carried_ok]
-            else:
-                fresh_names = files
-            fresh = _file_stats(
-                wh, wh._path(database, table), fresh_names, schema,
-                cols, blooms,
-            )
-        manifest = {
-            "version": next_v,
-            "retired": sorted(retired),
-            "schema": schema.json(),
-            **_assemble_manifest_entry(
-                wh, database, table, prev if vs else None,
-                files, added, removed, fresh, cols, blooms,
-            ),
-        }
-        if summary:
-            # commit provenance (Iceberg snapshot-summary's public
-            # design): small operation metadata — e.g. the WAP staging
-            # id — surfaced by history() for auditability
-            manifest["summary"] = dict(summary)
-        cons = (
-            dict(constraints)
-            if constraints is not None
-            else (prev.get("constraints", {}) if vs else {})
-        )
-        if cons:
-            manifest["constraints"] = cons
-        # carry the idempotent-append watermarks: dropping them would
-        # let a later stream replay re-apply an already-committed batch
-        if vs and prev.get("txns"):
-            manifest["txns"] = prev["txns"]
-        if vs and prev.get("dvs"):
-            # appends never resurrect MoR-deleted rows: tombstones
-            # ride every commit until apply_deletion_vectors /
-            # maintenance physically removes the rows
-            manifest["dvs"] = prev["dvs"]
-            manifest["dv_rows"] = prev.get("dv_rows", 0)
-            if "dv_files" in prev:
-                manifest["dv_files"] = prev["dv_files"]
-        try:
-            _put_manifest(wh, database, table, manifest)
-            return next_v
-        except CommitConflictError as e:
-            last_err = e
-            continue
-    raise last_err  # type: ignore[misc]  # _CAS_ATTEMPTS consecutive conflicts
+            and (f in prev_set or not f.startswith(_COW_PREFIXES))
+        ]
+        return files, set(disk)
+
+    return _commit_loop(
+        wh, database, table, live, stat_cols=stat_cols,
+        bloom_cols=bloom_cols, summary=summary, constraints=constraints,
+    )
 
 
 def append_versioned(
@@ -1679,74 +1796,20 @@ def _txn_commit(
     that advanced past us mid-retry means a concurrent same-app
     writer — loud ConcurrentTxnError, see the class docstring."""
     app, tv = txn
-    last_err: CommitConflictError | None = None
-    for _attempt in range(_CAS_ATTEMPTS):
-        if _attempt:
-            _cas_backoff(_attempt)
-        vs = versions(wh, database, table)
-        try:
-            next_v = _next_version(wh, database, table, vs=vs)
-        except CommitConflictError as e:
-            last_err = e  # racer landed since our listing: re-read
-            continue
-        prev = _manifest(wh, database, table, vs[-1]) if vs else None
-        carried_txns = dict(prev.get("txns", {})) if prev else {}
-        if carried_txns.get(app, -(10**18)) >= tv:
+
+    def live(prev, prev_files):
+        if prev and prev.get("txns", {}).get(app, -(10**18)) >= tv:
             raise ConcurrentTxnError(
                 f"txn ({app!r}, {tv}) was committed concurrently to "
                 f"{database}.{table}; idempotent appends must be "
                 "sequential per app id"
             )
-        prev_files = (
-            _manifest_files(wh, database, table, prev) if prev else []
-        )
-        files = sorted(set(prev_files) | set(landed))
-        schema = wh.schema(database, table)
-        cols = (
-            list(stat_cols)
-            if stat_cols is not None
-            else (prev.get("stat_cols", []) if prev else [])
-        )
-        blooms = (
-            list(bloom_cols)
-            if bloom_cols is not None
-            else (prev.get("bloom_cols", []) if prev else [])
-        )
-        fresh = (
-            _file_stats(
-                wh, wh._path(database, table), landed, schema,
-                cols, blooms,
-            )
-            if (cols or blooms)
-            else {}
-        )
-        manifest = {
-            "version": next_v,
-            "retired": sorted(prev.get("retired", [])) if prev else [],
-            "schema": schema.json(),
-            **_assemble_manifest_entry(
-                wh, database, table, prev, files,
-                added=sorted(landed), removed=set(),
-                fresh_stats=fresh, cols=cols, blooms=blooms,
-            ),
-            "txns": {**carried_txns, app: tv},
-        }
-        if summary:
-            manifest["summary"] = dict(summary)
-        if prev and prev.get("constraints"):
-            manifest["constraints"] = prev["constraints"]
-        if prev and prev.get("dvs"):
-            manifest["dvs"] = prev["dvs"]
-            manifest["dv_rows"] = prev.get("dv_rows", 0)
-            if "dv_files" in prev:
-                manifest["dv_files"] = prev["dv_files"]
-        try:
-            _put_manifest(wh, database, table, manifest)
-            return next_v
-        except CommitConflictError as e:
-            last_err = e
-            continue
-    raise last_err  # type: ignore[misc]
+        return sorted(set(prev_files) | set(landed)), None
+
+    return _commit_loop(
+        wh, database, table, live, stat_cols=stat_cols,
+        bloom_cols=bloom_cols, summary=summary, txn=txn,
+    )
 
 
 def set_constraints(
@@ -2017,18 +2080,11 @@ def _overwrite_versioned_once(
         # exact either way: it diffs manifests, not change files)
         changes = None
     rewritten = _cow_rewrite(wh, base, aligned, prefix="ow")
-    if stat_cols is not None and set(stat_cols) != set(
-        prev.get("stat_cols", [])
-    ):
-        # stat-column change rides the overwrite: every file is fresh,
-        # so recording the new columns costs nothing extra
-        prev = dict(prev)
-        prev["stat_cols"] = list(stat_cols)
-    if bloom_cols is not None and set(bloom_cols) != set(
-        prev.get("bloom_cols", [])
-    ):
-        prev = dict(prev)
-        prev["bloom_cols"] = list(bloom_cols)
+    # a stat-column change rides the overwrite: every file is fresh,
+    # so recording the new columns costs nothing extra (the commit
+    # computes stats under its prev's columns and never rebases)
+    cols, blooms = _stat_config(prev, stat_cols, bloom_cols)
+    prev = {**prev, "stat_cols": cols, "bloom_cols": blooms}
     next_v = _cow_commit(
         wh, database, table, prev, prev_files, rewritten, changes,
         summary=summary,
@@ -2360,52 +2416,41 @@ def rollback_table(
         )
     latest = _manifest(wh, database, table, vs[-1])
     next_v = _next_version(wh, database, table, vs=vs)
-    # files ADDED after to_version stay on disk as the newer versions'
-    # audit trail; mark them retired so commit_snapshot can't re-adopt
-    newer = (
-        set(_manifest_files(wh, database, table, latest))
-        | set(latest.get("retired", []))
-    ) - set(target_files)
-    manifest = {
-        "version": next_v,
-        "retired": sorted(newer & disk),
-        "schema": target["schema"],
+    manifest = _build_manifest(
+        wh, database, table, next_v, latest,
+        _manifest_files(wh, database, table, latest), target_files, {},
+        schema=target["schema"],
         # change-data-feed capture: the rollback's net effect as
         # explicit change rows (the exceptAll diff latest -> target,
         # a distributed churn-proportional job), so streaming CDC
         # consumers replay the rollback from parquet on executors —
         # the same delete/insert pairs batch read_changes derives
-        "changes": _write_changes(
+        changes=_write_changes(
             wh,
             database,
             table,
             read_changes(wh, database, table, vs[-1], to_version),
         ),
-    }
-    # identical file list -> the target's files/stats entry (inline or
-    # shard references — shards are immutable, sharing them is free)
-    for k in (
-        "files", "stats", "stat_cols", "bloom_cols", "shards",
-        "n_files", "bloom_sidecars",
+        # identical file list -> the target's files/stats entry
+        # (inline or shard references — shards are immutable, sharing
+        # them is free) under the target's stat config
+        stat_cols=target.get("stat_cols", []),
+        bloom_cols=target.get("bloom_cols", []),
+        stats_base=target,
         # deletion vectors are DATA state (which rows are visible),
         # so rollback restores the TARGET's tombstone set — rows
         # MoR-deleted after to_version come back, and read_changes'
-        # dv-delta handling emits them as the rollback's inserts
-        "dvs", "dv_rows", "dv_files",
-    ):
-        if k in target:
-            manifest[k] = target[k]
-    # constraints are table CONFIG, not version content: a rollback
-    # undoes data, not the quality gate added since
-    if latest.get("constraints"):
-        manifest["constraints"] = latest["constraints"]
-    # per-app txn watermarks are config too: a rollback undoes data,
-    # not the record of which stream batches were EVER applied — a
-    # checkpoint replay after rollback must still no-op for batches
-    # whose rows remain in the table (or were deliberately rolled
-    # away; re-appending them silently would break exactly-once)
-    if latest.get("txns"):
-        manifest["txns"] = latest["txns"]
+        # dv-delta handling emits them as the rollback's inserts.
+        # Constraints and per-app txn watermarks are table CONFIG and
+        # carry from the latest version: a rollback undoes data, not
+        # the quality gate added since, nor the record of which stream
+        # batches were EVER applied (a checkpoint replay after
+        # rollback must still no-op)
+        dvs=_dv_state(target),
+        # files ADDED after to_version stay on disk as the newer
+        # versions' audit trail and join the retired set
+        listing=disk,
+    )
     _put_manifest(wh, database, table, manifest)
     return next_v
 
@@ -3315,99 +3360,44 @@ def _cow_commit(
     is there' must recompute against the winner by definition)."""
     from pyspark.sql import types as T
 
-    base = wh._path(database, table)
     schema = T.StructType.fromJson(json.loads(prev["schema"]))
     affected = set(affected)
-    cols = prev.get("stat_cols", [])
-    blooms = prev.get("bloom_cols", [])
+    cols, blooms = _stat_config(prev)
     # rewritten-file stats are parent-independent: compute ONCE, both
     # the first attempt and any rebase re-commit reuse them
     fresh = (
-        _file_stats(wh, base, rewritten, schema, cols, blooms)
+        _file_stats(
+            wh, wh._path(database, table), rewritten, schema, cols, blooms
+        )
         if (cols or blooms)
         else {}
     )
 
     def _attempt(parent: dict, rebase_note: dict | None) -> int:
         parent_files = _manifest_files(wh, database, table, parent)
-        new_files = sorted(
-            [f for f in parent_files if f not in affected] + rewritten
-        )
         # number from the SAME snapshot `parent` came from (see
         # _next_version's OCC requirement): a racer past it makes this
         # PUT lose the CAS loudly instead of silently dropping files
         next_v = _next_version(
             wh, database, table, vs=[parent["version"]]
         )
-        manifest = {
-            "version": next_v,
-            # replaced files stay on disk for older versions;
-            # commit_snapshot must never re-adopt them
-            "retired": sorted(
-                set(parent.get("retired", [])) | affected
+        manifest = _build_manifest(
+            wh, database, table, next_v, parent, parent_files,
+            [f for f in parent_files if f not in affected] + rewritten,
+            fresh, changes=changes,
+            summary={**(summary or {}), **(rebase_note or {})},
+            # deletion vectors: the GROW form (MoR DML, r15) assembles
+            # this op's OWN delta onto whatever parent the attempt
+            # commits against — which is what lets a MoR update rebase
+            # past a winner that also grew the vectors. clear_dvs drops
+            # them — overwrite (all old rows replaced) and
+            # apply_deletion_vectors (tombstones physically applied);
+            # those callers keep the dv-equality rebase precondition,
+            # so the clear stays exact on every attempt
+            dvs=dvs_add if dvs_add is not None else (
+                {} if clear_dvs else None
             ),
-            "schema": parent["schema"],
-            **_assemble_manifest_entry(
-                wh, database, table, parent, new_files,
-                added=rewritten, removed=affected,
-                fresh_stats=fresh, cols=cols, blooms=blooms,
-            ),
-        }
-        if changes is not None:
-            manifest["changes"] = changes
-        summ = dict(summary) if summary else {}
-        if rebase_note:
-            summ.update(rebase_note)
-        if summ:
-            manifest["summary"] = summ
-        if parent.get("constraints"):
-            manifest["constraints"] = parent["constraints"]
-        if parent.get("txns"):
-            # from the LATEST parent — an intervening txn append
-            # advanced per-app watermarks; carrying prev's would
-            # regress them and double-apply the next replay
-            manifest["txns"] = parent["txns"]
-        # deletion vectors: carried by default — safe because every
-        # COW rewrite/pack reads through the mask (the
-        # rewrite-must-mask invariant, _dv_mask), so tombstoned rows
-        # are physically dropped at any move and carried entries are
-        # live-or-dead, never wrong. dvs_add=(new entries, new rows,
-        # touched files) is the GROW form (MoR DML, r15): this op's
-        # OWN delta, assembled onto whatever parent the attempt
-        # commits against — which is what lets a MoR update rebase
-        # past a winner that also grew the vectors (the old prebuilt
-        # override was exact only under prev, forcing dv-equality in
-        # the rebase precondition). clear_dvs drops the vectors —
-        # overwrite (all old rows replaced) and apply_deletion_vectors
-        # (tombstones physically applied); those callers keep the
-        # dv-equality rebase precondition, so the clear stays exact
-        # on every attempt.
-        if dvs_add is not None:
-            new_dvs = list(parent.get("dvs", [])) + list(dvs_add[0])
-            if new_dvs:
-                manifest["dvs"] = new_dvs
-                manifest["dv_rows"] = int(parent.get("dv_rows", 0)) + int(
-                    dvs_add[1]
-                )
-                # file-scoped mask coverage stays recordable only when
-                # the parent's own coverage is known (the legacy rule
-                # MoR DML applied against prev, now per-attempt)
-                if (
-                    not parent.get("dvs") or "dv_files" in parent
-                ) and dvs_add[2] is not None:
-                    manifest["dv_files"] = sorted(
-                        set(parent.get("dv_files", []))
-                        | set(dvs_add[2])
-                    )
-        elif not clear_dvs and parent.get("dvs"):
-            manifest["dvs"] = parent["dvs"]
-            manifest["dv_rows"] = parent.get("dv_rows", 0)
-            if "dv_files" in parent:
-                # carried unchanged: a rewrite may retire a named
-                # file (its entries go dead), but dv_files only needs
-                # to stay a SUPERSET of live tombstoned files —
-                # readers intersect it with the plan's file list
-                manifest["dv_files"] = parent["dv_files"]
+        )
         _put_manifest(wh, database, table, manifest)
         return next_v
 
@@ -4049,56 +4039,46 @@ def _apply_deletion_vectors_once(
         }
     )
     candidates = sorted(recorded & set(live))
-    if not candidates:
-        # every tombstone names a retired/repacked file: dead entries,
-        # metadata-only clear. Winner-added files can't conflict with
-        # folding tombstones (they are never tombstoned — the rebase
-        # precondition pins dv state unchanged): validate_added="ignore"
-        next_v = _cow_commit(
-            wh, database, table, prev, set(), [], [],
-            summary=summary, clear_dvs=True,
-            validate_added="ignore",
+    affected: list[str] = []
+    if candidates:
+        tagged = (
+            wh.spark.read.schema(schema)
+            .parquet(*[f"{base}/{n}" for n in candidates])
+            .withColumn(
+                "__file",
+                F.element_at(F.split(F.input_file_name(), "/"), -1),
+            )
         )
-        return next_v, 0
-    tagged = (
-        wh.spark.read.schema(schema)
-        .parquet(*[f"{base}/{n}" for n in candidates])
-        .withColumn(
-            "__file",
-            F.element_at(F.split(F.input_file_name(), "/"), -1),
+        if prev.get("dv_rows", 0) <= _DV_BROADCAST_ROWS:
+            dvf = F.broadcast(dvf)
+        affected = sorted(
+            r["__file"]
+            for r in tagged.join(
+                dvf,
+                (tagged["__file"] == dvf["file"])
+                & (tagged["__row_id"] == dvf["rid"]),
+                "semi",
+            )
+            .select("__file")
+            .distinct()
+            .collect()
         )
+    # no affected file: every tombstone names a retired/repacked file
+    # or its rows already left the live files via COW/overwrite — dead
+    # entries, a metadata-only clear
+    rewritten = (
+        _cow_rewrite(
+            wh, base,
+            _dv_mask(
+                wh, database, table, prev,
+                wh.spark.read.schema(schema).parquet(
+                    *[f"{base}/{n}" for n in affected]
+                ),
+            ),
+        )
+        if affected
+        else []
     )
-    if prev.get("dv_rows", 0) <= _DV_BROADCAST_ROWS:
-        dvf = F.broadcast(dvf)
-    affected = sorted(
-        r["__file"]
-        for r in tagged.join(
-            dvf,
-            (tagged["__file"] == dvf["file"])
-            & (tagged["__row_id"] == dvf["rid"]),
-            "semi",
-        )
-        .select("__file")
-        .distinct()
-        .collect()
-    )
-    if not affected:
-        # every tombstone is dead (its rows already left the live
-        # files via COW/overwrite): metadata-only clear (adds can't
-        # conflict — same reasoning as the clear above)
-        next_v = _cow_commit(
-            wh, database, table, prev, set(), [], [],
-            summary=summary, clear_dvs=True,
-            validate_added="ignore",
-        )
-        return next_v, 0
-    keep = _dv_mask(
-        wh, database, table, prev,
-        wh.spark.read.schema(schema).parquet(
-            *[f"{base}/{n}" for n in affected]
-        ),
-    )
-    rewritten = _cow_rewrite(wh, base, keep)
     next_v = _cow_commit(
         wh, database, table, prev, affected, rewritten, [],
         summary=summary, clear_dvs=True,
@@ -4203,8 +4183,6 @@ def stage_append(
             f"{database}.{table} is not snapshot-managed; "
             "commit_snapshot first"
         )
-    from pyspark.sql import functions as F
-
     schema = wh.schema(database, table)
     known = {f.name for f in schema.fields}
     extra = [c for c in batch.columns if c not in known]
@@ -4213,18 +4191,8 @@ def stage_append(
             f"staged append cannot add columns {extra}; evolve the "
             "table with a regular append first, then stage"
         )
-    aligned = batch.select(
-        *[
-            (
-                F.col(f.name).try_cast(f.dataType)
-                if f.name in batch.columns
-                else F.lit(None).cast(f.dataType)
-            ).alias(f.name)
-            for f in schema.fields
-        ]
-    )
     sid = f"wap-{uuid.uuid4().hex[:16]}"
-    aligned.write.mode("overwrite").parquet(
+    _aligned(batch, schema).write.mode("overwrite").parquet(
         f"{_snap_dir(wh, database, table)}/{_STAGED_DIR}/{sid}"
     )
     return sid
@@ -4429,9 +4397,6 @@ def _compact_small_files_once(
         out = src.coalesce(n_target)
 
     rewritten = _cow_rewrite(wh, base, out, prefix="pack")
-    new_files = sorted(
-        [n for n in files if n not in set(small)] + rewritten
-    )
     # content-preserving: zero CDC rows (explicit empty change set).
     # A concurrent winner's ADDED files can never conflict with
     # packing these small files (their rows are untouched either
@@ -4444,9 +4409,87 @@ def _compact_small_files_once(
     return {
         "version": next_v,
         "files_rewritten": len(small),
-        "files_after": len(new_files),
+        "files_after": len(files) - len(small) + len(rewritten),
         "bytes_rewritten": total,
     }
+
+
+def _metadata_refs(manifests) -> dict[str, set]:
+    """The ``_snapshots`` metadata the given manifests reference, by
+    subdirectory: change-file dirs, deletion-vector dirs, manifest
+    shards and externalized-filter sidecars."""
+    refs: dict[str, set] = {
+        _CHANGES_DIR: set(), _DV_DIR: set(), _SHARDS_DIR: set(),
+        _BLOOMS_DIR: set(),
+    }
+    for m in manifests:
+        refs[_CHANGES_DIR].update(
+            rel.split("/")[1] for rel in m.get("changes", [])
+        )
+        refs[_DV_DIR].update(rel.split("/")[1] for rel in m.get("dvs", []))
+        refs[_SHARDS_DIR].update(rec["name"] for rec in m.get("shards", []))
+        refs[_BLOOMS_DIR].update(m.get("bloom_sidecars", []))
+    return refs
+
+
+def _reclaim_metadata(
+    wh: Warehouse,
+    database: str,
+    table: str,
+    referenced: dict[str, set],
+    dead: dict[str, set],
+    grace_ms: int,
+) -> None:
+    """maintain_table's one reclaim sweep over the ``_snapshots``
+    metadata no retained manifest references (``referenced``, from
+    _metadata_refs): change-file dirs (the expired versions' CDF
+    parquet — a stream cursor inside the retention window replays
+    fine, one below it already errs loudly at the manifest read),
+    deletion-vector dirs (the full rewrite read through the mask, so
+    every expired vector is applied), manifest shards and
+    externalized-filter sidecars, plus CAS-loser debris of each.
+
+    NEVER-referenced metadata gets a grace window: commits write
+    change files / dv files / shards / sidecars BEFORE their manifest
+    PUT, so young unreferenced entries may belong to a commit in
+    flight — deleting them would let that commit land a manifest
+    naming missing files. Entries the expired manifests named
+    (``dead``) carry no such ambiguity and reclaim regardless of age;
+    sidecars are reclaimed by age alone.
+
+    "Now" comes from the STORE's clock, not the driver's: the ages
+    being compared are filesystem mtimes stamped by the storage
+    service, and driver-vs-store skew would silently shrink (or
+    stretch) the window — a probe file written here and stat'ed back
+    yields the store's own timestamp, so the grace window is skew-free
+    by construction. If the probe write fails we fall back to the
+    driver clock (documented bounded-skew assumption)."""
+    import uuid
+
+    snapd = _snap_dir(wh, database, table)
+    probe = f"{snapd}/.reclaim-probe-{uuid.uuid4().hex}"
+    try:
+        hfs.write_text(wh.spark, probe, "")
+        store_now_ms = hfs.mtime(wh.spark, probe)
+        hfs.delete(wh.spark, probe, recursive=False)
+    except Exception:
+        store_now_ms = int(time.time() * 1000)
+    cutoff_ms = store_now_ms - grace_ms
+    # (subdirectory, entries are directories, dead refs reclaim at once)
+    for sub, dirs, by_ref in (
+        (_CHANGES_DIR, True, True),
+        (_DV_DIR, True, True),
+        (_SHARDS_DIR, False, True),
+        (_BLOOMS_DIR, False, False),
+    ):
+        root = f"{snapd}/{sub}"
+        for n in hfs.list_names(wh.spark, root, dirs_only=dirs):
+            if n in referenced[sub]:
+                continue
+            if (by_ref and n in dead[sub]) or hfs.mtime(
+                wh.spark, f"{root}/{n}"
+            ) <= cutoff_ms:
+                hfs.delete(wh.spark, f"{root}/{n}", recursive=dirs)
 
 
 def maintain_table(
@@ -4494,8 +4537,6 @@ def maintain_table(
     maintenance writer assumed; run on a retention cadence, after the
     time-travel window you promise readers has passed.
     """
-    import uuid
-
     from pyspark.sql import types as T
 
     from .operators.compaction import (
@@ -4562,10 +4603,7 @@ def maintain_table(
     # recompute zone maps for the compacted layout: range-clustering on
     # sort_col is exactly what makes per-file min/max maximally
     # selective, so maintenance refreshes rather than drops them
-    from pyspark.sql import types as T
-
-    cols = prev.get("stat_cols", [])
-    blooms = prev.get("bloom_cols", [])
+    cols, blooms = _stat_config(prev)
     stats = (
         _file_stats(
             wh, base, sorted(rewritten),
@@ -4575,166 +4613,56 @@ def maintain_table(
         if (cols or blooms)
         else {}
     )
-    new_manifest = {
-        "version": next_v,
-        # every pre-compaction file is now dead; listing them as
-        # retired blocks commit_snapshot re-adoption until the
-        # physical delete below (or a later maintenance) runs
-        "retired": sorted(prev_files | retired),
-        "schema": prev["schema"],
+    new_manifest = _build_manifest(
+        wh, database, table, next_v, prev, prev_files, rewritten, stats,
         # compaction preserves content exactly: an EXPLICIT empty
         # change set, so CDC consumers crossing this version emit
         # nothing (vs a pure append, where absent "changes" means
         # "the added files are the inserts")
-        "changes": [],
-        # prev=None: the compacted layout is all-fresh, so the entry
-        # re-shards (or re-inlines) from scratch — maintenance is also
-        # the shard-compaction point
-        **_assemble_manifest_entry(
-            wh, database, table, None, sorted(rewritten),
-            added=sorted(rewritten), removed=set(),
-            fresh_stats=stats, cols=cols, blooms=blooms,
-        ),
-    }
-    if summary:
+        changes=[],
         # provenance on the truncated-to-one snapshot (and anything a
         # derived-table maintainer must re-pin across the truncation,
         # e.g. the ANN index's quantizer-sidecar pointer — history
         # before this version is gone, so the pointer must ride HERE)
-        new_manifest["summary"] = dict(summary)
-    if prev.get("constraints"):
-        new_manifest["constraints"] = prev["constraints"]
-    if prev.get("txns"):
-        # idempotent-append watermarks survive history truncation
-        new_manifest["txns"] = prev["txns"]
+        summary=summary,
+        # the rewrite read through the mask: every vector is applied
+        dvs={},
+        # the compacted layout is all-fresh, so the entry re-shards
+        # (or re-inlines) from scratch — maintenance is also the
+        # shard-compaction point
+        stats_base=None,
+    )
     _put_manifest(wh, database, table, new_manifest)
-    # capture the change-dir / shard references of every manifest
-    # ABOUT TO BE expired: those are definitively dead the moment
-    # expiry removes the only manifests naming them, so they reclaim
-    # unconditionally below
-    dead_dirs: set = set()
-    dead_dv_dirs: set = set()
-    dead_shards: set = set()
-    for v in versions(wh, database, table):
-        if v == next_v:
-            continue
-        m = _manifest(wh, database, table, v)
-        for rel in m.get("changes", []):
-            dead_dirs.add(rel.split("/")[1])
-        for rel in m.get("dvs", []):
-            dead_dv_dirs.add(rel.split("/")[1])
-        for rec in m.get("shards", []):
-            dead_shards.add(rec["name"])
-    # post-commit cleanup: drop old manifests, then old data files —
-    # MINUS any file a retained manifest still references (tags are
-    # retention barriers: a tag-protected version's files must stay
-    # readable across maintenance; they reclaim on the first
-    # maintenance after the tag is deleted, via the retired set)
+    # every manifest is read ONCE: the ones about to be expired name
+    # the change dirs / dv dirs / shards that are definitively dead the
+    # moment expiry removes them; the retained ones name what stays
+    seen = {
+        v: _manifest(wh, database, table, v)
+        for v in versions(wh, database, table)
+        if v != next_v
+    }
+    dead = _metadata_refs(seen.values())
+    seen[next_v] = new_manifest
     expired = expire_snapshots(wh, database, table, keep_last=1)
+    retained = {
+        v: seen[v] if v in seen else _manifest(wh, database, table, v)
+        for v in versions(wh, database, table)
+    }
+    # post-commit cleanup: drop old data files — MINUS any file a
+    # retained manifest still references (tags are retention barriers:
+    # a tag-protected version's files must stay readable across
+    # maintenance; they reclaim on the first maintenance after the tag
+    # is deleted, via the retired set)
     protected: set = set()
-    for v_keep in versions(wh, database, table):
+    for v_keep, m in retained.items():
         if v_keep != next_v:
-            protected |= set(
-                _manifest_files(
-                    wh, database, table,
-                    _manifest(wh, database, table, v_keep),
-                )
-            )
+            protected |= set(_manifest_files(wh, database, table, m))
     for name in sorted((prev_files | retired) - protected):
         hfs.delete(wh.spark, f"{base}/{name}", recursive=False)
-    # reclaim change-file dirs no retained manifest references — the
-    # expired versions' CDF parquet, plus CAS-loser debris. Kept
-    # change dirs are exactly the retained manifests' "changes" sets,
-    # so a stream cursor inside the retention window replays fine and
-    # one below it already errs loudly at the manifest read.
-    # NEVER-referenced metadata gets a grace window: DML commits write
-    # change files / shards BEFORE their manifest PUT, so young
-    # unreferenced entries may belong to a commit in flight — deleting
-    # them would let that commit land a manifest naming missing files.
-    # Expired-manifest refs (dead_dirs/dead_shards) carry no such
-    # ambiguity and reclaim regardless of age.
-    # "Now" comes from the STORE's clock, not the driver's: the ages
-    # being compared are filesystem mtimes stamped by the storage
-    # service, and driver-vs-store skew would silently shrink (or
-    # stretch) the window — a probe file written here and stat'ed
-    # back yields the store's own timestamp, so the grace window is
-    # skew-free by construction. If the probe write fails we fall
-    # back to the driver clock (documented bounded-skew assumption).
-    import time as _time
-    import uuid as _uuid
-
-    probe = f"{base}/{_SNAP_DIR}/.reclaim-probe-{_uuid.uuid4().hex}"
-    try:
-        hfs.write_text(wh.spark, probe, "")
-        store_now_ms = hfs.mtime(wh.spark, probe)
-        hfs.delete(wh.spark, probe, recursive=False)
-    except Exception:
-        store_now_ms = int(_time.time() * 1000)
-    cutoff_ms = store_now_ms - reclaim_grace_ms
-    chg_root = f"{base}/{_SNAP_DIR}/{_CHANGES_DIR}"
-    referenced_dirs: set = set()
-    for v in versions(wh, database, table):
-        for rel in _manifest(wh, database, table, v).get("changes", []):
-            referenced_dirs.add(rel.split("/")[1])
-    for d in hfs.list_names(wh.spark, chg_root, dirs_only=True):
-        if d in referenced_dirs:
-            continue
-        if (
-            d in dead_dirs
-            or hfs.mtime(wh.spark, f"{chg_root}/{d}") <= cutoff_ms
-        ):
-            hfs.delete(wh.spark, f"{chg_root}/{d}")
-    # same for deletion-vector dirs: maintenance's full rewrite read
-    # through the mask and committed a fresh manifest with no "dvs",
-    # so every vector of the expired history is definitively applied
-    # — reclaim dead ones unconditionally, unreferenced-young ones
-    # ride the same in-flight-commit grace as change dirs
-    dv_root = f"{base}/{_SNAP_DIR}/{_DV_DIR}"
-    referenced_dv: set = set()
-    for v in versions(wh, database, table):
-        for rel in _manifest(wh, database, table, v).get("dvs", []):
-            referenced_dv.add(rel.split("/")[1])
-    for d in hfs.list_names(wh.spark, dv_root, dirs_only=True):
-        if d in referenced_dv:
-            continue
-        if (
-            d in dead_dv_dirs
-            or hfs.mtime(wh.spark, f"{dv_root}/{d}") <= cutoff_ms
-        ):
-            hfs.delete(wh.spark, f"{dv_root}/{d}")
-    # same for manifest shards: keep only the retained manifests'
-    # shard set (history truncated to one version, so this reclaims
-    # every expired-manifest shard immediately, plus unreferenced
-    # debris older than the grace window; a concurrent sharded
-    # commit's pre-PUT shards are inside the window and survive)
-    sh_root = f"{base}/{_SNAP_DIR}/{_SHARDS_DIR}"
-    referenced_shards: set = set()
-    for v in versions(wh, database, table):
-        for rec in _manifest(wh, database, table, v).get("shards", []):
-            referenced_shards.add(rec["name"])
-    for n in hfs.list_names(wh.spark, sh_root):
-        if n in referenced_shards:
-            continue
-        if (
-            n in dead_shards
-            or hfs.mtime(wh.spark, f"{sh_root}/{n}") <= cutoff_ms
-        ):
-            hfs.delete(wh.spark, f"{sh_root}/{n}", recursive=False)
-    # and for externalized-filter sidecars (r9): retained manifests
-    # name their sidecars directly (bloom_sidecars), so GC never
-    # opens a shard; unreferenced sidecars past the grace window are
-    # lost-CAS debris or expired-version leftovers
-    bl_root = f"{base}/{_SNAP_DIR}/{_BLOOMS_DIR}"
-    referenced_sidecars: set = set()
-    for v in versions(wh, database, table):
-        referenced_sidecars |= set(
-            _manifest(wh, database, table, v).get("bloom_sidecars", [])
-        )
-    for n in hfs.list_names(wh.spark, bl_root):
-        if n in referenced_sidecars:
-            continue
-        if hfs.mtime(wh.spark, f"{bl_root}/{n}") <= cutoff_ms:
-            hfs.delete(wh.spark, f"{bl_root}/{n}", recursive=False)
+    _reclaim_metadata(
+        wh, database, table, _metadata_refs(retained.values()), dead,
+        reclaim_grace_ms,
+    )
     # the dead files are physically gone: drain the retired set (a
     # crash before this re-PUT leaves stale retired names, which the
     # next commit_snapshot prunes against the directory listing).
@@ -4747,12 +4675,11 @@ def maintain_table(
     # next commit_snapshot prunes it against the directory anyway.
     vs_now = versions(wh, database, table)
     if vs_now and vs_now[-1] == next_v:
-        still_dead = sorted(
-            (prev_files | retired)
+        drained = dict(new_manifest)
+        drained["retired"] = sorted(
+            set(new_manifest["retired"])
             & set(_data_files(wh, database, table))
         )
-        drained = dict(new_manifest)
-        drained["retired"] = still_dead
         _put_manifest(
             wh, database, table, drained,
             overwrite=True,  # same-version metadata rewrite, not a commit

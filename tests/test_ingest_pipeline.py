@@ -3943,6 +3943,85 @@ def test_compact_rebases_over_concurrent_append(
     assert ch.count() == 0
 
 
+def test_compact_recomputes_after_losing_to_maintenance(
+    spark, tmp_path, monkeypatch
+):
+    """maintain_table replaces every live file, and its manifest must
+    record them as ``removed``: a compaction that loses its CAS to
+    maintenance must then recompute against the compacted layout. With
+    ``removed`` empty it rebased its pack files onto that layout and
+    every row landed twice (40 rows -> 80)."""
+    from scratchdb_spark import snapshots as snap
+
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    for b in range(4):
+        snap.append_versioned(
+            wh, "db", "t",
+            spark.createDataFrame(
+                [(b * 10 + i, b) for i in range(10)],
+                "__row_id long, grp long",
+            ),
+        )
+    maint = []
+    state = _race_once_with(
+        snap, monkeypatch,
+        lambda: maint.append(
+            snap.maintain_table(wh, "db", "t", reclaim_grace_ms=0)
+        ),
+    )
+    snap.compact_small_files(wh, "db", "t", auto_fold_dvs=False)
+    assert state["raced"] == 1
+    live = snap.read_snapshot(wh, "db", "t")
+    assert live.count() == 40
+    assert live.select("__row_id").distinct().count() == 40
+    m_maint = maint[0]["version"]
+    assert snap._manifest(wh, "db", "t", m_maint)["removed"]
+    for v in snap.versions(wh, "db", "t"):
+        summ = snap._manifest(wh, "db", "t", v).get("summary", {})
+        assert summ.get("rebased_onto") != m_maint
+
+
+@pytest.mark.parametrize("readds_match", [False, True])
+def test_cow_delete_races_rollback(
+    spark, tmp_path, monkeypatch, readds_match
+):
+    """A rollback records its file deltas like any commit, so a COW
+    DELETE that loses its CAS to one is judged by them: it rebases
+    when the files the rollback re-adds hold no matching row, and
+    recomputes (deleting the re-added matches too) when they do."""
+    from pyspark.sql import functions as F
+
+    from scratchdb_spark import snapshots as snap
+
+    a = [(i, 2 if readds_match and i < 5 else 1) for i in range(10)]
+    b = [(i, 2 if i < 15 else 1) for i in range(10, 20)]
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    for rows in (a, b):  # v1, v2
+        snap.append_versioned(
+            wh, "db", "t",
+            spark.createDataFrame(rows, "__row_id long, grp long"),
+        )
+    snap.delete_where(wh, "db", "t", F.col("__row_id") < 10)  # v3
+    state = _race_once_with(
+        snap, monkeypatch,
+        lambda: snap.rollback_table(wh, "db", "t", 2),  # v4
+    )
+    v, _n = snap.delete_where(wh, "db", "t", F.col("grp") == 2)
+    assert state["raced"] == 1 and v == 5
+    summ = snap._manifest(wh, "db", "t", v).get("summary", {})
+    if readds_match:
+        assert "rebased_from" not in summ
+    else:
+        assert (summ["rebased_from"], summ["rebased_onto"]) == (3, 4)
+    assert _rows(snap.read_snapshot(wh, "db", "t"), ["__row_id", "grp"]) == [
+        r for r in a + b if r[1] != 2
+    ]
+    ch = snap.read_changes(wh, "db", "t", 4, v)
+    assert _rows(ch, ["_change_type", "__row_id", "grp"]) == [
+        ("delete", *r) for r in a + b if r[1] == 2
+    ]
+
+
 def test_rebase_carries_winner_txn_watermark(spark, tmp_path, monkeypatch):
     """A rebase must take txns from the WINNER's manifest: when the
     intervening commit is an exactly-once txn append, the rebased DML
