@@ -21,6 +21,7 @@ from __future__ import annotations
 
 import hashlib
 import json
+import logging
 import re
 import threading
 import time
@@ -36,6 +37,8 @@ from ..ingest.pipeline import IngestPipeline, PartialInsertError
 from ..session import child_session
 from ..tables import Warehouse
 from .control import ControlStore, ShareLink
+
+log = logging.getLogger("scratchdb_spark.api")
 
 
 def _hash_key(key: str) -> str:
@@ -260,6 +263,20 @@ def make_handler(api: ScratchAPI):
             self.end_headers()
             self.wfile.write(data)
             self._observe(len(data))
+            if 400 <= code < 500:
+                # the client's error: one line, no stack
+                text = data.decode(errors="replace")
+                log.info("%s %s -> %d: %s", self.command, self._route(),
+                         code, " ".join(text.split())[:300])
+
+        def _server_error(self) -> None:
+            """Answer 500 with an error id; the traceback goes to the log
+            under that id, not to the client (it can hold JVM text and
+            server paths)."""
+            err_id = uuidlib.uuid4().hex[:12]
+            log.error("%s %s failed (error id %s)", self.command,
+                      self._route(), err_id, exc_info=True)
+            self._send(500, f"Internal server error (error id {err_id})")
 
         def _send_stream(self, ctype: str, chunks) -> None:
             self.send_response(200)
@@ -399,8 +416,8 @@ def make_handler(api: ScratchAPI):
                 self._send(500, "Partially inserted data")
             except ValueError as e:
                 self._send(400, str(e))
-            except Exception as e:
-                self._send(500, str(e))
+            except Exception:
+                self._server_error()
 
         def _query(self):
             dest = self._auth()
@@ -421,8 +438,8 @@ def make_handler(api: ScratchAPI):
                 self._send_stream(ctype, chunks)
             except q.QueryError as e:
                 self._send(400, str(e))
-            except Exception as e:
-                self._send(500, str(e))
+            except Exception:
+                self._server_error()
 
         def _tables(self):
             dest = self._auth()
@@ -478,8 +495,10 @@ def make_handler(api: ScratchAPI):
                     link.destination_id, link.query, fmt
                 )
                 self._send_stream(ctype, chunks)
-            except Exception as e:
-                self._send(500, str(e))
+            except q.QueryError as e:
+                self._send(400, str(e))
+            except Exception:
+                self._server_error()
 
     return Handler
 

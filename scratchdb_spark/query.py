@@ -16,9 +16,12 @@ linked-list readers).
 from __future__ import annotations
 
 import json
+import logging
+import threading
 from typing import Iterator
 
 from pyspark.errors import AnalysisException
+from pyspark.logger import PySparkLogger
 from pyspark.sql import DataFrame, SparkSession
 
 
@@ -47,14 +50,36 @@ def guard_query(query: str) -> str:
     return f"SELECT * FROM (\n{q}\n)"
 
 
+_analyzing = threading.local()
+
+
+class _NotWhileAnalyzing(logging.Filter):
+    def filter(self, record: logging.LogRecord) -> bool:
+        return not getattr(_analyzing, "on", False)
+
+
+# pyspark logs every captured SQL exception at ERROR, with the full JVM
+# stack, through this logger; a query that fails to analyze is the
+# client's error, which the caller reports. The logger is fetched the
+# way pyspark fetches it: a plain ``logging.Logger`` in its place would
+# raise TypeError on pyspark's ``errorClass=`` keyword.
+PySparkLogger.getLogger("SQLQueryContextLogger").addFilter(
+    _NotWhileAnalyzing()
+)
+
+
 def execute(spark: SparkSession, query: str) -> DataFrame:
     """Trim, guard, and analyze the query through Catalyst. A query
     that does not parse or analyze (unknown table or column, not a
-    query) raises :class:`QueryError`."""
+    query) raises :class:`QueryError`; pyspark's log record of it is
+    dropped."""
+    _analyzing.on = True
     try:
         return spark.sql(guard_query(query))
     except AnalysisException as e:
         raise QueryError(str(e)) from e
+    finally:
+        _analyzing.on = False
 
 
 def _json_value(v):

@@ -4438,6 +4438,7 @@ def _reclaim_metadata(
     table: str,
     referenced: dict[str, set],
     dead: dict[str, set],
+    named_files: set,
     grace_ms: int,
 ) -> None:
     """maintain_table's one reclaim sweep over the ``_snapshots``
@@ -4447,7 +4448,12 @@ def _reclaim_metadata(
     fine, one below it already errs loudly at the manifest read),
     deletion-vector dirs (the full rewrite read through the mask, so
     every expired vector is applied), manifest shards and
-    externalized-filter sidecars, plus CAS-loser debris of each.
+    externalized-filter sidecars, plus CAS-loser debris of each. The
+    same sweep takes the data files of CAS-losing attempts: a
+    ``_COW_PREFIXES`` file enters a manifest only through its own
+    commit, so one no retained manifest names (``named_files``) is
+    debris. Unnamed plain files stay: the next listing commit adopts
+    them.
 
     NEVER-referenced metadata gets a grace window: commits write
     change files / dv files / shards / sidecars BEFORE their manifest
@@ -4490,6 +4496,14 @@ def _reclaim_metadata(
                 wh.spark, f"{root}/{n}"
             ) <= cutoff_ms:
                 hfs.delete(wh.spark, f"{root}/{n}", recursive=dirs)
+    base = wh._path(database, table)
+    for n in _data_files(wh, database, table):
+        if (
+            n.startswith(_COW_PREFIXES)
+            and n not in named_files
+            and hfs.mtime(wh.spark, f"{base}/{n}") <= cutoff_ms
+        ):
+            hfs.delete(wh.spark, f"{base}/{n}", recursive=False)
 
 
 def maintain_table(
@@ -4506,17 +4520,17 @@ def maintain_table(
     history to one fresh snapshot of the compacted layout. Returns
     the compaction stats plus the new version.
 
-    ``reclaim_grace_ms``: unreferenced change dirs / manifest shards
-    younger than this are NOT reclaimed. DML commits write their
-    change files and shards BEFORE the manifest PUT (that ordering is
-    what makes the PUT the single atomic commit point), so a commit in
-    flight during maintenance briefly has metadata no manifest
-    references yet; deleting it as debris would let the commit land a
-    manifest naming missing files. The grace window (default 10 min —
-    generous vs any real commit latency) means only metadata old
-    enough that its owning commit either landed (now referenced) or
-    died (true debris) is reclaimed; 0 restores reclaim-everything for
-    quiesced tables.
+    ``reclaim_grace_ms``: unreferenced change dirs / manifest shards /
+    ``_COW_PREFIXES`` data files younger than this are NOT reclaimed.
+    DML commits write their data, change files and shards BEFORE the
+    manifest PUT (that ordering is what makes the PUT the single
+    atomic commit point), so a commit in flight during maintenance
+    briefly has files no manifest references yet; deleting them as
+    debris would let the commit land a manifest naming missing files.
+    The grace window (default 10 min — generous vs any real commit
+    latency) means only files old enough that their owning commit
+    either landed (now referenced) or died (true debris) are
+    reclaimed; 0 restores reclaim-everything for quiesced tables.
 
     The compaction is itself a copy-on-write commit: the compacted
     layout is written to NEW file names alongside the live files, the
@@ -4659,9 +4673,12 @@ def maintain_table(
             protected |= set(_manifest_files(wh, database, table, m))
     for name in sorted((prev_files | retired) - protected):
         hfs.delete(wh.spark, f"{base}/{name}", recursive=False)
+    named = protected | set(rewritten)
+    for m in retained.values():
+        named |= set(m.get("retired", []))
     _reclaim_metadata(
         wh, database, table, _metadata_refs(retained.values()), dead,
-        reclaim_grace_ms,
+        named, reclaim_grace_ms,
     )
     # the dead files are physically gone: drain the retired set (a
     # crash before this re-PUT leaves stale retired names, which the
@@ -4888,13 +4905,16 @@ def orphan_files(
     """Audit the table directory against its live manifests: which
     data files on disk does NO retained version reference, and which
     of those are known COW-retired (still needed only as the older
-    versions' audit trail) vs true orphans (crash debris from an
-    interrupted rewrite — safe to delete immediately).
+    versions' audit trail) vs orphans. An orphan is one of two kinds:
+    a ``_COW_PREFIXES`` file (the rewrite or batch of an attempt that
+    crashed or lost its CAS), which maintain_table deletes once it is
+    older than its ``reclaim_grace_ms``; or a plain appended file not
+    yet committed, which the next listing commit adopts and nothing
+    deletes.
 
     The dry-run half of VACUUM: at scale you run this on a cadence
-    and alert on growth, then let maintenance (or a manual delete of
-    the ``orphaned`` list) reclaim. Read-only; listing + manifest
-    reads, no data scan. Also audits METADATA debris under
+    and alert on growth, then let maintenance reclaim. Read-only;
+    listing + manifest reads, no data scan. Also audits METADATA debris under
     ``_snapshots/``: change-file dirs and manifest shards no retained
     version references (expiry leftovers / CAS-loser writes), and
     interrupted-rewrite temp dirs (``rw-*`` + the appends' dot-stage

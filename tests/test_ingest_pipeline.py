@@ -1201,7 +1201,8 @@ def test_orphan_files_report(spark, tmp_path):
     assert len(rep1["retired"]) >= 1
     assert rep1["orphaned"] == ["cow-deadbeef-stray.parquet"]
     # maintenance reclaims old + retired files; the stray (unknown to
-    # any manifest) remains visible as an orphan for manual cleanup
+    # any manifest) is younger than the default grace window, so it
+    # stays, visible as an orphan
     snap.maintain_table(wh, "db", "t")
     rep2 = snap.orphan_files(wh, "db", "t")
     assert rep2["retired"] == [] and rep2["missing"] == []
@@ -3979,6 +3980,49 @@ def test_compact_recomputes_after_losing_to_maintenance(
     for v in snap.versions(wh, "db", "t"):
         summ = snap._manifest(wh, "db", "t", v).get("summary", {})
         assert summ.get("rebased_onto") != m_maint
+
+
+def test_maintenance_reclaims_cas_loser_data_files(
+    spark, tmp_path, monkeypatch
+):
+    """A compaction that loses its CAS to maintenance leaves its first
+    attempt's pack files named by no manifest; the next maintenance
+    deletes them. A plain appended file no manifest names yet stays for
+    the next listing commit to adopt."""
+    from scratchdb_spark import snapshots as snap
+
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    for b in range(4):
+        snap.append_versioned(
+            wh, "db", "t",
+            spark.createDataFrame(
+                [(b * 10 + i, b) for i in range(10)],
+                "__row_id long, grp long",
+            ),
+        )
+    # default grace: the losing attempt's pack files are in flight
+    state = _race_once_with(
+        snap, monkeypatch, lambda: snap.maintain_table(wh, "db", "t"),
+    )
+    snap.compact_small_files(wh, "db", "t", auto_fold_dvs=False)
+    monkeypatch.undo()
+    assert state["raced"] == 1
+    assert any(
+        n.startswith("pack-")
+        for n in snap.orphan_files(wh, "db", "t")["orphaned"]
+    )
+    for _ in range(2):
+        snap.maintain_table(wh, "db", "t", reclaim_grace_ms=0)
+    assert snap.orphan_files(wh, "db", "t")["orphaned"] == []
+    assert snap.read_snapshot(wh, "db", "t").count() == 40
+
+    landed = wh.append_aligned(
+        "db", "t", spark.createDataFrame([(40, 9)], "__row_id long, grp long")
+    )
+    snap.maintain_table(wh, "db", "t", reclaim_grace_ms=0)
+    assert snap.orphan_files(wh, "db", "t")["orphaned"] == landed
+    snap.commit_snapshot(wh, "db", "t")
+    assert snap.read_snapshot(wh, "db", "t").count() == 41
 
 
 @pytest.mark.parametrize("readds_match", [False, True])
