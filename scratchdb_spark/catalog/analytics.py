@@ -1388,8 +1388,9 @@ def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         "balances the cells the smallest-id pick can't: measured "
         "probe coverage 1.0 vs 0.475 and recall@10 0.89 vs 0.46 at "
         "nprobe=1 on the 16-cluster sequential-id fixture "
-        "(ann_quality_r9.json); pytest pins kmeans >= smallest-id "
-        "recall there. Same candidate dataflow as ann_ivfpq_topk — "
+        "(ann_quality_r9.json at e9bc22d); pytest pins kmeans >= "
+        "smallest-id recall there. Same candidate dataflow as "
+        "ann_ivfpq_topk — "
         "only the centroid matrix changes.",
 )
 def ann_ivfpq_kmeans_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1744,7 +1745,8 @@ def agg_uniq_upto(spark: SparkSession, sf_dir: str) -> DataFrame:
         "non-decreasing in it (nested prefix probe lists x per-cell "
         "independence; the fixed budget's recall measurably FELL "
         "with nprobe — impostor crowding, ann_quality_r9.json; "
-        "monotone curves on both fixtures: ann_quality_r10.json, "
+        "monotone curves on both fixtures: ann_quality_r10.json "
+        "(both at e9bc22d), "
         "uniform kmeans 0.16->0.72 recall@10 over nprobe 1..16). "
         "Here: kmeans quantizer, nprobe=8 of 16 cells, k=5, same "
         "deterministic contracts as ann_ivfpq_kmeans_topk -> golden "
@@ -1853,8 +1855,9 @@ def agg_quantile_exact_weighted(
         "deterministically sub-buckets any bucket holding > "
         "max(2x mean share, min_split_rows) rows on its own observed "
         "sub-range (rehearsed at 20M rows: 16.1s collapsed -> 3.5s, "
-        "bit-identical; prefix_sum_rehearsal_r12.json). floor() on "
-        "the SAME IEEE product is cross-engine exact; the cube and "
+        "bit-identical; prefix_sum_rehearsal_r12.json at e9bc22d). "
+        "floor() on the SAME IEEE product is cross-engine exact; the "
+        "cube and "
         "the cumulative are BIGINT-exact; cum_share is one IEEE "
         "division, 6dp snap.",
 )

@@ -673,8 +673,8 @@ def udtf_chunk_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The doc_id predicate lives in a SUBQUERY below the lateral join:
     # written as a top-level WHERE, Spark 4 leaves the filter ABOVE the
     # ArrowEvalPythonUDTF node (plans/r14/udtf_chunk_windows_before.txt
-    # — no PushedFilters on the scan), so Python chunked ALL documents
-    # and 96% of the UDTF output was discarded. The filter commutes
+    # at e9bc22d — no PushedFilters on the scan), so Python chunked ALL
+    # documents and 96% of the UDTF output was discarded. The filter commutes
     # with the lateral join (it references only the pass-through input
     # column), so rows are identical; pinned by the pushdown plan
     # audit in tests/test_plans.py.
@@ -3931,7 +3931,8 @@ def events_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
         "all referenced sidecars concurrently (16-way pool) instead "
         "of resolving them serially per file — O(ceil(batches/16)) "
         "round trips, not O(batches); rehearsal-measured with 50 ms "
-        "injected per-op latency in tokbloom_rehearsal_r10.json. "
+        "injected per-op latency in tokbloom_rehearsal_r10.json "
+        "(at e9bc22d). "
         "Checks: the pruned scan still finds the marker row "
         "(pruning never drops data), plans FEWER files than the "
         "table holds (skipping works across batch boundaries), and "
@@ -4843,9 +4844,9 @@ def warehouse_stats_under_dv(
         "(rest -> raw), and unaffected files skip the per-row "
         "basename projection and the anti-join probe entirely "
         "(measured 2.08x full-scan overhead before the split, "
-        "mor_rehearsal_r10). file_scoped pins dv_files < total "
-        "files; plan_splits pins the Union + exactly one LeftAnti in "
-        "the executed plan; equals_full_mask pins bit-identical rows "
+        "mor_rehearsal_r10 at e9bc22d). file_scoped pins dv_files < "
+        "total files; plan_splits pins the Union + exactly one "
+        "LeftAnti in the executed plan; equals_full_mask pins bit-identical rows "
         "vs the conservative mask-everything read (both exceptAll "
         "directions empty).",
     bench=False,  # times temp-warehouse setup, not a scan

@@ -286,7 +286,7 @@ def rename_many(
     rename is a ~50-200 ms copy+delete round trip, and commit paths
     issue ONE per landed data file: serial that is O(files) x latency
     (measured 13.6 s of a 17.9 s bulk commit at 256 files x 50 ms —
-    commit_latency_rehearsal_r10.json), pooled it is
+    commit_latency_rehearsal_r10.json at e9bc22d), pooled it is
     ~ceil(files/16) x latency. Raises IOError naming every failed
     pair; callers treat any failure as a pre-commit abort (the files
     are invisible until a manifest PUT references them)."""

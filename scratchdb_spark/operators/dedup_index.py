@@ -8,26 +8,27 @@ range-clustered on ``band_hash`` with zone-map stats. New batches
 are checked for near-dups against the indexed corpus with one
 equi-join on (band, band_hash) plus an exact-jaccard verify over only
 the candidate pairs — work scales with the batch and its candidates,
-never the corpus (rehearsal-measured: dedup_index_rehearsal_r9).
+never the corpus (rehearsal-measured: dedup_index_rehearsal_r9 at
+e9bc22d).
 
-File-skipping honesty: band hashes are UNIFORM, so a batch probe of
-h distinct hashes plans ~F x (1 - (1 - 1/F)^h) of F range-clustered
-files — effectively ALL files while F <~ h, and SATURATING AT ~h
-(one file per probed hash) once the corpus is sliced finer than the
-probe. Measured on the 50k-doc index, 100-doc probe (1600 hashes),
-model vs planned (dedup_index_rehearsal_r10.json): 64 files -> 64/64,
-1024 -> 807 (model 810, 79%), 4096 -> 1325 (model 1325, 32%). That
-saturation is the 100 TB story: at production granularity (10^5-10^6
-files) a probe of h hashes plans at most ~h files NO MATTER how many
-files the corpus has — sub-linear in corpus files, bounded by the
-probe — and since r13 that holds at ANY probe size: the manifest
+File-skipping honesty: band hashes are UNIFORM, so a batch probe of h
+distinct hashes plans ~F x (1 - (1 - 1/F)^h) of F range-clustered
+files — effectively ALL files while F <~ h, and SATURATING AT ~h (one
+file per probed hash) once the corpus is sliced finer than the probe.
+Measured on the 50k-doc index, 100-doc probe (1600 hashes), model vs
+planned (dedup_index_rehearsal_r10.json at e9bc22d): 64 files ->
+64/64, 1024 -> 807 (model 810, 79%), 4096 -> 1325 (model 1325, 32%).
+That saturation is the 100 TB story: at production granularity
+(10^5-10^6 files) a probe of h hashes plans at most ~h files NO MATTER
+how many files the corpus has — sub-linear in corpus files, bounded by
+the probe — and since r13 that holds at ANY probe size: the manifest
 pass normalizes the IN-list once (snapshots._EqValues: set membership
-+ bisect against zone maps), so per-file skip checks cost
-O(|dict| + log h) and there is NO full-scan fallback above a cap (the
-r12 verdict's weak — probes beyond the old 4096-hash cap used to
-read the whole index per ingest batch). POINT probes ("is this one
-doc already in the corpus?") plan ~bands files at EVERY granularity
-(measured 12-16 across 16/64/1024/4096 files).
++ bisect against zone maps), so per-file skip checks cost O(|dict| +
+log h) and there is NO full-scan fallback above a cap (the r12
+verdict's weak — probes beyond the old 4096-hash cap used to read the
+whole index per ingest batch). POINT probes ("is this one doc already
+in the corpus?") plan ~bands files at EVERY granularity (measured
+12-16 across 16/64/1024/4096 files).
 
 Unlike the ANN index there is NO trained state to freeze: band rows
 are a pure function of the text (fixed splitmix salts,
@@ -194,7 +195,7 @@ def refresh_dedup_index(
     (append_deduped per micro-batch) is append-only by construction,
     so it paid that O(index) scan every batch for zero deletions;
     scoping the delete to delete-preimage ids makes the refresh cost
-    purely churn-sized there (measured: r13_rehearsal.json
+    purely churn-sized there (measured: r13_rehearsal.json at e9bc22d,
     gate_cadence.delete_scan_cost_s is the per-batch wall this
     skips).
 

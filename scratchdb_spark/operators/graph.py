@@ -32,7 +32,7 @@ __all__ = ["connected_components", "components_for_pairs"]
 #: instead: lineage depth stays bounded at K join+agg rounds (the O(1)
 #: plan-depth property within a constant) while a short run — the
 #: catalog's 3-iteration query — fuses into ONE action that AQE plans
-#: jointly. Module-level so tools/r15_ab.py can run both shapes.
+#: jointly. Module-level so an A/B can run both shapes.
 _PAGERANK_CKPT_EVERY = 4
 
 
@@ -315,8 +315,8 @@ def cooccurrence_edges(
     definition, not by implementation. A single viral cell (one hot
     item-day) dominates the whole job at scale: the round-8 10x
     rehearsal measured a 9,400x shuffle blowup when replication
-    accidentally made every cell 10x denser (r8c_rehearsal.json,
-    PERF.md). So the same contract as the dedup family's exact
+    accidentally made every cell 10x denser (r8c_rehearsal.json at
+    e9bc22d, PERF.md). So the same contract as the dedup family's exact
     baselines: `refuse_hot_groups` probes the hottest cell (one
     map-side-combined count, linear) and fails loudly above
     `max_cell_nodes` — at scale you cap, sample, or TF-IDF-weight

@@ -281,7 +281,8 @@ def maintain_minmax_mv(
     extremum — which a MASS delete makes ALL groups, at which point
     the maintain path degenerates to a full recompute PLUS the delta
     plan's overhead (measured crossover: 10M rows, all-groups rescan
-    maintain 2.4 s vs plain recompute 0.81 s — ivm_rehearsal_r8).
+    maintain 2.4 s vs plain recompute 0.81 s — ivm_rehearsal_r8 at
+    e9bc22d).
     ``max_rescan_groups`` guards that cliff: when MORE groups than
     the threshold need rescanning (counted with a bounded
     limit(threshold+1) probe, never a driver materialization), the
@@ -302,7 +303,8 @@ def maintain_minmax_mv(
     ``lambda ks: read_snapshot(wh, db, t, prune_eq=("k", [k for
     (k,) in ks]))`` on a table with stat_cols on the group key, where
     the manifest dictionary/zone-map skips every file holding none
-    of the rescanned groups (measured: tools/ivm_rehearsal.py).
+    of the rescanned groups (measured by tools/ivm_rehearsal.py at
+    e9bc22d).
     A merge_upsert's update flows through as its delete/insert pair.
     Exactness includes the duplicate-boundary case (deleting one of
     two min-carrying rows): such groups rescan by rule, so the MV

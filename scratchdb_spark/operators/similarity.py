@@ -1133,8 +1133,8 @@ def _coarse_centroids(
       On clustered corpora k-means balances the cells the arbitrary
       smallest-id pick can't, raising probed-cell recall at equal
       nprobe (pytest-pinned on the clustered fixture; measured in
-      ann_quality_r9.json). Cell labels are the centroid indices
-      0..k-1 (synthetic — k-means centroids are means, not corpus
+      ann_quality_r9.json at e9bc22d). Cell labels are the centroid
+      indices 0..k-1 (synthetic — k-means centroids are means, not corpus
       rows); the ivf/pq dataflow only ever equi-joins on the label.
     """
     if quantizer == "kmeans":
@@ -1267,7 +1267,8 @@ def _adc_candidates(index, probes, qids, tables, m, nq, spark,
     fixed global budget, by contrast, lets impostors from newly
     probed cells CROWD OUT true neighbors under the approximate ADC
     order (measured recall DROPPING with nprobe,
-    ann_quality_r9.json; monotone curve: ann_quality_r10.json).
+    ann_quality_r9.json; monotone curve: ann_quality_r10.json; both
+    at e9bc22d).
 
     ``exclude_self`` drops candidates whose vec_id EQUALS the query
     id — right for corpus-drawn queries (the family convention:
@@ -1395,13 +1396,13 @@ def ivfpq_topk(
     candidates per (query, PROBED CELL) instead of per query, making
     recall provably monotone non-decreasing in nprobe (nested probe
     lists + per-cell independence — see _adc_candidates; the fixed
-    budget's recall measurably FELL with nprobe via impostor
-    crowding, ann_quality_r9.json). The per-cell pool is a SUPERSET
-    of the fixed-budget pool at equal settings (any cell holds at
-    most k*overfetch of the global top-k*overfetch), so the flip
-    never loses a candidate. ``False`` keeps the r8/r9 fixed-budget
-    shape reachable for the quality-comparison tooling; refine cost
-    under adaptive mode is q*k*overfetch*nprobe dots — still
+    budget's recall measurably FELL with nprobe via impostor crowding,
+    ann_quality_r9.json at e9bc22d). The per-cell pool is a SUPERSET
+    of the fixed-budget pool at equal settings (any cell holds at most
+    k*overfetch of the global top-k*overfetch), so the flip never
+    loses a candidate. ``False`` keeps the r8/r9 fixed-budget shape
+    reachable for the quality-comparison tooling; refine cost under
+    adaptive mode is q*k*overfetch*nprobe dots — still
     candidate-bounded, never corpus-bounded. Golden fixtures
     regenerated at the flip (r11, make_fixtures double-run gate).
 

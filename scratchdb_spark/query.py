@@ -15,7 +15,6 @@ linked-list readers).
 
 from __future__ import annotations
 
-import json
 import logging
 import threading
 from typing import Iterator
@@ -82,10 +81,6 @@ def execute(spark: SparkSession, query: str) -> DataFrame:
         _analyzing.on = False
 
 
-def _json_value(v):
-    return v
-
-
 def stream_json(df: DataFrame) -> Iterator[str]:
     """Yield chunks of a single JSON array (reference N9).
 
@@ -142,8 +137,3 @@ def _csv_cell(s: str) -> str:
 
 def query_csv(spark: SparkSession, query: str) -> str:
     return "".join(stream_csv(execute(spark, query)))
-
-
-def to_json_rows(df: DataFrame) -> list[dict]:
-    """Decoded-row convenience used by tests and the API layer."""
-    return json.loads("".join(stream_json(df)))

@@ -104,6 +104,12 @@ _DEFAULTS = {
     # Set once at build time — a read path mutating session conf would
     # race on a shared engine.
     "spark.sql.legacy.parquet.nanosAsLong": "true",
+    # Python workers import the package (UDFs, mapInPandas kernels)
+    # whatever the driver's working directory; Spark merges this path
+    # with its own and with the PYTHONPATH the JVM was started with.
+    "spark.executorEnv.PYTHONPATH": os.path.dirname(
+        os.path.dirname(os.path.abspath(__file__))
+    ),
 }
 
 

@@ -816,18 +816,18 @@ _SHARDS_DIR = "shards"
 # --- oversized-filter sidecars (r9) ----------------------------------
 #
 # Token blooms are 16 KB base64 per file/col (measured 22 KB/file of
-# snapshot JSON at 1000 files, tokbloom_rehearsal_r8.json — ~2.2 GB of
-# driver-parsed metadata extrapolated to 100k files). Any per-file
-# auxiliary filter whose encoded payload exceeds _INLINE_BLOOM_CAP is
-# therefore EXTERNALIZED at commit time: the batch's oversized bitmaps
-# land in ONE content-addressed sidecar JSON under
-# ``_snapshots/blooms/``, and the inline stat record keeps a ~60 B
-# reference ``{"sc": <sidecar>, "k": "<file>|<entry>"}``. Planning
-# stays correct and lazy: manifest/shard parsing never touches the
-# bitmaps; only a probe that actually uses them (prune_tokens) opens
-# the sidecars — and only for files that survived range/eq pruning
-# first. Sidecars are immutable and shared across versions like
-# shards; maintenance reclaims the unreferenced ones.
+# snapshot JSON at 1000 files, tokbloom_rehearsal_r8.json at e9bc22d —
+# ~2.2 GB of driver-parsed metadata extrapolated to 100k files). Any
+# per-file auxiliary filter whose encoded payload exceeds
+# _INLINE_BLOOM_CAP is therefore EXTERNALIZED at commit time: the
+# batch's oversized bitmaps land in ONE content-addressed sidecar JSON
+# under ``_snapshots/blooms/``, and the inline stat record keeps a ~60 B
+# reference ``{"sc": <sidecar>, "k": "<file>|<entry>"}``. Planning stays
+# correct and lazy: manifest/shard parsing never touches the bitmaps;
+# only a probe that actually uses them (prune_tokens) opens the sidecars
+# — and only for files that survived range/eq pruning first. Sidecars
+# are immutable and shared across versions like shards; maintenance
+# reclaims the unreferenced ones.
 _BLOOMS_DIR = "blooms"
 _INLINE_BLOOM_CAP = 2048  # bytes of encoded payload; knob
 
@@ -2556,7 +2556,8 @@ def read_snapshot(
     # scan). A standing 100-row takedown vector then taxes only its
     # own files; the other N-k files skip the per-row basename
     # projection and the anti-join probe entirely (measured 2.08×
-    # full-scan overhead in mor_rehearsal_r10 before this split).
+    # full-scan overhead in mor_rehearsal_r10, at e9bc22d, before this
+    # split).
     # Legacy manifests with dvs but no dv_files keep the correct,
     # conservative mask-everything read.
     if manifest.get("dvs") and "dv_files" in manifest:

@@ -4,6 +4,9 @@ destinations/clickhouse/clickhouse_test.go round-trip pattern)."""
 from __future__ import annotations
 
 import json
+import os
+import subprocess
+import sys
 
 import pytest
 
@@ -4553,3 +4556,216 @@ def test_dml_locks_self_evict(spark, tmp_path):
         "__row_id",
     )
     assert snap._DML_LOCKS == {}
+
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def _driver(script, args, cwd, stderr=subprocess.PIPE):
+    """A second Spark driver: ``python -c script REPO *args`` run from
+    ``cwd`` with one core, a 1 GB heap and no PYTHONPATH, so the
+    package reaches its Python workers only through the session."""
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env.update(SPARK_GRAFT_CPUS="1", SPARK_GRAFT_DRIVER_MEM="1g")
+    return subprocess.Popen(
+        [sys.executable, "-c", script, REPO, *args],
+        stdout=subprocess.PIPE,
+        stderr=stderr,
+        text=True,
+        cwd=str(cwd),
+        env=env,
+    )
+
+
+_WORKER_IMPORT_PROBE = r"""
+import sys
+sys.path.insert(0, sys.argv[1])
+from scratchdb_spark.session import get_spark
+
+
+def rows(batches):
+    import scratchdb_spark  # noqa: F401  (runs in the Python worker)
+    yield from batches
+
+
+spark = get_spark("worker-import")
+spark.sparkContext.setLogLevel("OFF")
+print("ROWS", spark.range(3).mapInPandas(rows, "id long").count())
+"""
+
+
+def test_workers_import_package_from_foreign_cwd(tmp_path):
+    """A driver started outside the checkout, with the package only
+    on its own sys.path, runs a mapInPandas kernel that imports the
+    package: get_spark hands the package's parent directory to the
+    Python workers (spark.executorEnv.PYTHONPATH)."""
+    proc = _driver(_WORKER_IMPORT_PROBE, [], tmp_path)
+    try:
+        out, err = proc.communicate(timeout=300)
+    finally:
+        proc.kill()
+    assert "ROWS 3" in out.splitlines(), err[-3000:]
+
+
+_XPROC_WRITER = r"""
+import json, os, sys, time
+sys.path.insert(0, sys.argv[1])
+from pyspark.sql import functions as F
+from scratchdb_spark import snapshots as snap
+from scratchdb_spark.session import get_spark
+from scratchdb_spark.tables import Warehouse
+
+root, go, lo = sys.argv[2], sys.argv[3], int(sys.argv[4])
+spark = get_spark("xproc-writer")
+spark.sparkContext.setLogLevel("OFF")
+wh = Warehouse(spark, root)
+
+
+def wait_for(phase):
+    print("READY " + phase, flush=True)
+    while not os.path.exists(os.path.join(go, phase)):
+        time.sleep(0.01)
+
+
+wait_for("txn")
+batch = spark.range(1000).select(
+    (F.col("id") + 10_000).alias("__row_id"),
+    (F.col("id") % 97).alias("amount"),
+)
+try:
+    snap.append_versioned(wh, "db", "txn", batch, txn=("stream-app", 1))
+    print("TXN returned", flush=True)
+except snap.ConcurrentTxnError:
+    print("TXN concurrent_txn_error", flush=True)
+
+wait_for("dml")
+counts = []
+for c in range(2):
+    w0 = lo + c * 1000
+    _v, n = snap.update_where_mor(
+        wh, "db", "mor",
+        (F.col("__row_id") >= w0) & (F.col("__row_id") < w0 + 1000),
+        {"amount": F.col("amount") + 1},
+    )
+    counts.append(n)
+print("DML " + json.dumps(counts), flush=True)
+"""
+
+
+def test_cross_process_writers_converge(spark, tmp_path):
+    """Two separate driver processes write one warehouse, where no
+    in-process lock applies and only the manifest CAS orders them.
+    (a) Both replay the same (app_id, version) txn append: its rows
+    land exactly once and the watermark is that version. (b) Each runs
+    two MoR updates on its own key range of a 10k-row table: every op
+    reports its rows and the final table equals the commuted
+    expectation. How many commits rebased depends on timing and is
+    only reported."""
+    import queue
+    import threading
+    import time
+
+    from pyspark.sql import functions as F
+
+    from scratchdb_spark import snapshots as snap
+
+    root, go = tmp_path / "wh", tmp_path / "go"
+    go.mkdir()
+    procs, logs, lines = [], [], [queue.Queue(), queue.Queue()]
+    deadline = time.monotonic() + 300
+
+    def pump(p, q):
+        for line in p.stdout:
+            q.put(line.strip())
+        q.put(None)
+
+    def both(prefix):
+        """The rest of each writer's next line that starts with
+        ``prefix``; other lines are skipped."""
+        got = []
+        for i, q in enumerate(lines):
+            line = ""
+            while not line.startswith(prefix):
+                try:
+                    line = q.get(
+                        timeout=max(0.1, deadline - time.monotonic())
+                    )
+                except queue.Empty:
+                    pytest.fail(f"no {prefix!r} from writer {i} in time")
+                if line is None:
+                    tail = (tmp_path / f"writer{i}.log").read_text()
+                    pytest.fail(
+                        f"writer {i} exited before {prefix!r}:\n"
+                        + tail[-3000:]
+                    )
+            got.append(line[len(prefix):].strip())
+        return got
+
+    def run(phase, prefix):
+        both("READY " + phase)
+        (go / phase).touch()
+        return both(prefix)
+
+    try:
+        for i, lo in enumerate((0, 5000)):
+            logs.append(open(tmp_path / f"writer{i}.log", "w"))
+            procs.append(_driver(
+                _XPROC_WRITER, [str(root), str(go), str(lo)], tmp_path,
+                stderr=logs[i],
+            ))
+            threading.Thread(
+                target=pump, args=(procs[i], lines[i]), daemon=True
+            ).start()
+        wh = Warehouse(spark, str(root))
+        snap.append_versioned(
+            wh, "db", "txn",
+            spark.createDataFrame([(0, 0)], "__row_id long, amount long"),
+        )
+        base = spark.range(0, 10_000, 1, 4).select(
+            F.col("id").alias("__row_id"), (F.col("id") % 97).alias("amount")
+        )
+        snap.append_versioned(wh, "db", "mor", base)
+        v0 = snap.versions(wh, "db", "mor")[-1]
+
+        outcomes = run("txn", "TXN")
+        assert set(outcomes) <= {"returned", "concurrent_txn_error"}
+        window = snap.read_snapshot(wh, "db", "txn").filter(
+            F.col("__row_id").between(10_000, 10_999)
+        )
+        assert window.count() == 1000
+        assert window.select("__row_id").distinct().count() == 1000
+        m = snap._manifest(
+            wh, "db", "txn", snap.versions(wh, "db", "txn")[-1]
+        )
+        assert m["txns"] == {"stream-app": 1}
+
+        counts = run("dml", "DML")
+        assert [json.loads(c) for c in counts] == [[1000, 1000]] * 2
+        touched = (F.col("__row_id") < 2000) | F.col("__row_id").between(
+            5000, 6999
+        )
+        expected = base.withColumn(
+            "amount", F.col("amount") + F.when(touched, 1).otherwise(0)
+        )
+        final = snap.read_snapshot(wh, "db", "mor").select(
+            "__row_id", "amount"
+        )
+        assert final.count() == 10_000
+        assert final.exceptAll(expected).limit(1).count() == 0
+        assert expected.exceptAll(final).limit(1).count() == 0
+        commits = [
+            snap._manifest(wh, "db", "mor", v)
+            for v in snap.versions(wh, "db", "mor") if v > v0
+        ]
+        rebased = sum(
+            (c.get("summary") or {}).get("rebased_onto") is not None
+            for c in commits
+        )
+        print(f"cross-process MoR: {rebased} of {len(commits)} commits "
+              "rebased")
+    finally:
+        for p in procs:
+            p.kill()
+            p.wait()
+        for f in logs:
+            f.close()

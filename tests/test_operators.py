@@ -3507,8 +3507,8 @@ def test_minmax_mv_mass_delete_guard(spark, tmp_path):
     """max_rescan_groups (r9): a MASS delete turns the rescan set
     into ALL groups — past the crossover the maintain path costs
     MORE than a plain recompute (measured: 2.4 s maintain vs 0.81 s
-    recompute at 10M rows, ivm_rehearsal_r8). The guard must (a)
-    fall back to one full recompute when the probe crosses the
+    recompute at 10M rows, ivm_rehearsal_r8 at e9bc22d). The guard
+    must (a) fall back to one full recompute when the probe crosses the
     threshold, (b) stay on the maintain path below it, and (c)
     return the exact recompute answer either way."""
     from pyspark.sql import functions as F
@@ -4147,8 +4147,9 @@ def test_ivfpq_adaptive_overfetch_recall_monotone_in_nprobe(spark):
     the candidate set is NESTED in nprobe (prefix-nested probe lists,
     per-cell independence) and exact-refined recall is monotone
     non-decreasing — the fixed global budget measurably is not
-    (impostor crowding, ann_quality_r9.json). Also pins: at nprobe=1
-    the two modes coincide (one cell: per-cell == global budget)."""
+    (impostor crowding, ann_quality_r9.json at e9bc22d). Also pins:
+    at nprobe=1 the two modes coincide (one cell: per-cell == global
+    budget)."""
     import numpy as np
 
     from scratchdb_spark.operators.similarity import (

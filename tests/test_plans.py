@@ -200,8 +200,9 @@ def test_udtf_chunk_windows_filter_below_udtf(spark):
     """The doc_id predicate must reach the parquet scan BELOW the
     ArrowEvalPythonUDTF (r14b): written as a top-level WHERE, Spark 4
     left it above the UDTF and Python chunked every document — 96% of
-    the UDTF output discarded (plans/r14/udtf_chunk_windows_before.txt,
-    measured 0.99 s -> 0.26 s). The subquery form pins the pushdown."""
+    the UDTF output discarded (plans/r14/udtf_chunk_windows_before.txt
+    at e9bc22d, measured 0.99 s -> 0.26 s). The subquery form pins the
+    pushdown."""
     spec = catalog.registry()["udtf_chunk_windows"]
     df = spec.spark_fn(spark, SF_DIR)
     plan = df._jdf.queryExecution().executedPlan().toString()
